@@ -31,11 +31,16 @@ import org.apache.spark.sql.functions._
   *    low-rate/reference tables.
   *
   * Scale design (local[32] here, 1000 executors in production):
-  *  - dedup is `groupBy(key).agg(max_by(...))`, not a window: declarative
-  *    aggregation gets map-side partial aggregation, so a hot url collapses
-  *    to ≤1 row per input partition before the shuffle — skew bounded by
-  *    construction. An explicit two-stage salted variant (`saltBuckets`>0)
-  *    covers pathological single-key floods per the north_star.
+  *  - one dedup shape per mode, both `groupBy(key).agg(max(lsn))` + a
+  *    broadcast semi join back, never a window: declarative aggregation
+  *    gets map-side partial aggregation, so a hot url collapses to ≤1 row
+  *    per input partition before the shuffle — skew bounded by
+  *    construction. MOR joins on one xxhash64(key, lsn) column (a
+  *    collision admits an extra lower-LSN delta row, which reads and
+  *    compaction reconcile away); CoW joins exactly on (key, lsn). A
+  *    two-stage salted max (`saltBuckets` > 1, or engaged automatically
+  *    by the previous batch's duplication ratio) covers pathological
+  *    single-key floods per the north_star.
   *  - copy-on-write touches only buckets present in the batch (manifest
   *    file pruning); untouched files carry forward without IO.
   *  - stats ride the write via `Observation` — no second pass.
@@ -47,15 +52,13 @@ object MergeApply {
   case object MergeOnRead extends MergeMode
 
   /** Parquet codec for every lake data write (deltas, CoW, compaction,
-    * step outputs). Default zstd: the 32-core merge is BANDWIDTH-bound,
-    * not CPU-bound (BASELINE.md round-5 scaling §3), so the stronger
-    * codec's fewer bytes through the bus/FS beat snappy's cheaper CPU —
-    * measured +10% merge-apply throughput in a same-window A/B
-    * (zstd 256.7k vs snappy 232.8k ev/s at 2M events, local[32];
-    * lz4 244.0k, uncompressed 248.5k). Override via
-    * SPARK_GRAFT_PARQUET_CODEC for CPU-starved deployments. */
-  private[graft] def lakeCodec: String =
-    sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "zstd")
+    * step outputs). zstd: the 32-core merge is BANDWIDTH-bound, not
+    * CPU-bound (BASELINE.md round-5 scaling §3), so the stronger codec's
+    * fewer bytes through the bus/FS beat snappy's cheaper CPU — measured
+    * +10% merge-apply throughput in a same-window A/B (zstd 256.7k vs
+    * snappy 232.8k ev/s at 2M events, local[32]; lz4 244.0k, uncompressed
+    * 248.5k). */
+  private[graft] val lakeCodec: String = "zstd"
 
   final case class MergeStats(
       batchId: Long,
@@ -133,30 +136,22 @@ object MergeApply {
   private[graft] def lastDupRatio(tableDir: String): Option[Double] =
     Option(dupRatio.get(tableDir))
   private[graft] def saltAutoEngaged(tableDir: String): Boolean =
-    lastDupRatio(tableDir).exists(_ >= autoSaltRatio)
-  private def autoSaltRatio: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SALT_RATIO", "8.0").toDouble
+    lastDupRatio(tableDir).exists(_ >= 8.0)
 
   private def recordDupRatio(tableDir: String, srcRow: Map[String, Any]): Unit = {
     val events = g(srcRow, "events"); val keys = g(srcRow, "keys")
     if (keys > 0) dupRatio.put(tableDir, events.toDouble / keys)
   }
 
-  /** LWW-dedup a batch down to one row per key.
-    *
-    * Shape: fixed-width `groupBy(key).agg(max(lsn))` (whole-stage-codegen
-    * HashAggregate with map-side partial aggregation — a hot key collapses
-    * to ≤1 slim row per input partition) + a semi join back on (key, lsn)
-    * to fetch the winning payloads. The payload column (html blobs) never
-    * shuffles: AQE broadcasts the slim max-LSN side. This deliberately
+  /** Slim (key, max-LSN) winners of a batch: a fixed-width
+    * `groupBy(key).agg(max(lsn))` (whole-stage-codegen HashAggregate with
+    * map-side partial aggregation — a hot key collapses to ≤1 slim row per
+    * input partition). `saltBuckets` > 1 adds an explicit two-stage
+    * reduction for pathological single-key floods. This deliberately
     * avoids `max_by(struct(...))`, whose variable-width aggregation buffer
-    * forces SortAggregate (two extra sorts of full payloads).
-    *
-    * Correctness relies on LSNs being unique within a batch (the WAL
-    * contract); `saltBuckets` > 1 adds an explicit two-stage reduction for
-    * pathological single-key floods (rarely needed given partial agg).
-    */
-  /** Slim (key, max-LSN) winners of a batch — two-stage when salted. */
+    * forces SortAggregate (two extra sorts of full payloads). A semi join
+    * back on (key, lsn) then picks exactly the winners because LSNs are
+    * unique within a batch (the WAL contract). */
   private def maxLsnOf(batch: DataFrame, key: String, saltBuckets: Int): DataFrame =
     if (saltBuckets > 1)
       batch
@@ -166,44 +161,17 @@ object MergeApply {
     else
       batch.groupBy(col(key)).agg(max(col("lsn")).as("lsn"))
 
-  private def dedupBatch(batch: DataFrame, key: String,
-      valueCols: Seq[String], saltBuckets: Int): DataFrame = {
-    val maxLsn = maxLsnOf(batch, key, saltBuckets)
-    // broadcast the slim (key, maxLsn) side: micro-batches are bounded, so
-    // its size is bounded by batch key-cardinality × ~60B — the payload
-    // side then never shuffles at all (measured: shuffled semi joins
-    // anti-scale under local-mode shuffle contention)
-    val joinStrategy = sys.env.getOrElse("SPARK_GRAFT_DEDUP_JOIN", "broadcast")
-    val rhs = if (joinStrategy == "auto") maxLsn else maxLsn.hint(joinStrategy)
-    batch
-      .join(rhs, Seq(key, "lsn"), "left_semi")
-      .select(
-        (col(key) +: col("lsn").as("__s_lsn") +: col("op").as("__s_op") +:
-          valueCols.map(c => col(c).as(s"__s_$c"))): _*)
-  }
+  /** Width of the MOR winner hash: `None` is the full 64-bit xxhash64. */
+  @volatile private var winnerHashBits: Option[Int] = None
 
-  /** reduce-by-key LWW: keep the max-`_lsn` row per key, as two narrow
-    * mapPartitions around the (mandatory) bucket shuffle — map-side combine
-    * then final reduce, the classic reduceByKey shape on a DataFrame.
-    * `_bucket` = hash(key) guarantees co-location of each key. */
-  private def lwwReduceByKey(df: DataFrame, key: String, b: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    val enc = org.apache.spark.sql.Encoders.row(df.schema)
-    val keyIdx = df.schema.fieldIndex(key)
-    val lsnIdx = df.schema.fieldIndex("_lsn")
-    def reduceIter(it: Iterator[Row]): Iterator[Row] = {
-      val m = new java.util.HashMap[Any, Row]()
-      it.foreach { r =>
-        val prev = m.get(r.get(keyIdx))
-        if (prev == null || r.getLong(lsnIdx) > prev.getLong(lsnIdx))
-          m.put(r.get(keyIdx), r)
-      }
-      import scala.jdk.CollectionConverters._
-      m.values().iterator().asScala
-    }
-    repartitionByBucket(
-      df.mapPartitions(reduceIter _)(enc), b) // map-side combine
-      .mapPartitions(reduceIter _)(enc) // final per-bucket reduce
+  /** Test hook: run `body` with the MOR winner hash narrowed to `bits`
+    * bits, so specs can force real collisions and prove the documented
+    * feed contract (reads/compaction reconcile; LWW feed consumers
+    * converge). */
+  private[graft] def withWinnerHashBits[T](bits: Int)(body: => T): T = {
+    require(bits >= 1 && bits <= 62, s"winner hash bits must be in 1..62, got $bits")
+    winnerHashBits = Some(bits)
+    try body finally winnerHashBits = None
   }
 
   /** Apply `batch` (schema: lsn long, op string, <key>, value columns of the
@@ -248,119 +216,62 @@ object MergeApply {
     // memo; an explicit value (>1 salted, 1 off) is always honored
     val effectiveSalt =
       if (saltBuckets == 0 && saltAutoEngaged(table.dir)) 16 else saltBuckets
-    // CoW joins against current state and needs the __s_-prefixed dedup
-    // shape; MOR dedups inside its own bucket-shuffle pipeline instead
-    lazy val source = dedupBatch(observedBatch, key, valueCols, effectiveSalt)
-
-    val debugT0 = System.nanoTime()
-    def dbg(label: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_DEBUG_MERGE"))
-        System.err.println(f"[merge $batchId] $label: ${(System.nanoTime() - debugT0) / 1e9}%.3f s")
 
     mode match {
       case MergeOnRead =>
         // ---- append-only delta commit: cost ∝ batch size ------------------
-        // Two dedup strategies, both LWW-exact; pick by duplication profile:
-        //  - "broadcast" (default): slim max-LSN agg + broadcast semi join —
-        //    only WINNING payloads ever shuffle. Best when keys repeat a lot
-        //    within a batch but are spread across input partitions (the
-        //    web-crawl profile: measured 216k vs 121k ev/s on 20-events/url
-        //    batches, because reduce-by-key shuffles every map-side
-        //    survivor's 3 KB payload while this shuffles winners only).
-        //  - "reduce" (SPARK_GRAFT_MOR_DEDUP=reduce): map-side hashmap
-        //    combine → bucket shuffle → in-partition reduce. No broadcast
-        //    barrier, one fewer shuffle stage; wins when duplication is
-        //    mostly intra-partition (binlog tail with locality, replays).
+        // LWW dedup = slim max-LSN aggregate + a broadcast semi join on ONE
+        // xxhash64(key, lsn) column: only WINNING payloads shuffle (to the
+        // bucket write), and the driver-built broadcast is 8 B/key instead
+        // of the full url string — the broadcast build was the measured
+        // Amdahl fraction of the compute path at 32 cores. Round-5 A/Bs at
+        // 2M events/local[32]: hashed 279.1k/287.0k vs an exact (key, lsn)
+        // broadcast join 275.0k/258.5k ev/s; the broadcast shape beat a
+        // map-side reduce-by-key, which shuffles every survivor's payload,
+        // 216k vs 121k ev/s on 20-events/url batches.
+        //
+        // A hash collision (p ≈ keys·rows/2^64 per batch) admits a
+        // lower-LSN EXTRA row into the delta. MOR table READS and
+        // compaction reconcile by max-LSN per key, so the collided row
+        // always loses there; `changesBetween` emits raw delta rows, so a
+        // feed consumer can see a key twice within one commit's slice at
+        // that probability (the documented probabilistic feed contract —
+        // see LakeTable.changesBetween). The CoW path writes base files
+        // that are read UNRECONCILED — it keeps the exact (key, lsn) join.
         val snapId = meta.currentSnapshotId.getOrElse(0L) + 1
         val snapDirRel = s"data/snap-$snapId"
         val obsM = Observation(s"mor-$batchId")
-        dbg("pre-write")
-        //  - "hashed": like broadcast, but the semi join runs on a single
-        //    xxhash64(key, lsn) column, shrinking the driver-built broadcast
-        //    ~10× (8 B/key vs the full url string) — the broadcast build is
-        //    the measured Amdahl fraction of the compute path at 32 cores
-        //    (ScaleDecomp: probe scales 0.935, broadcast-dedup 0.445). A
-        //    hash collision (p ≈ keys·rows/2^64 per batch) admits a
-        //    lower-LSN EXTRA row into the delta. MOR table READS and
-        //    compaction reconcile by max-LSN per key, so the collided row
-        //    always loses there; `changesBetween` does NOT reconcile — it
-        //    emits raw delta rows, so a feed consumer can see a key twice
-        //    within one commit's slice at that probability (the documented
-        //    probabilistic feed contract — see LakeTable.changesBetween;
-        //    LWW consumers à la MergeApply converge regardless). The CoW
-        //    path writes base files that are read UNRECONCILED — it must
-        //    keep the exact (key, lsn) join and never use this.
-        // default hashed (round-5): alternated engine A/B at 2M/local[32]
-        // gave hashed 279.1k/287.0k vs broadcast 275.0k/258.5k ev/s, and
-        // ScaleDecomp shows the gain concentrates exactly where the north
-        // rule needs it - the 32-core side (5.1 s vs 7.2 s dedup compute)
-        val strategy = sys.props.getOrElse("graft.mor.dedup",
-          sys.env.getOrElse("SPARK_GRAFT_MOR_DEDUP", "hashed"))
-        val deduped =
-          if (strategy == "reduce") {
-            val projected = observedBatch.select(
-              (col(key) +: valueCols.map(col)) ++ Seq(
-                col("lsn").as("_lsn"),
-                (col("op") === "D").as("_deleted"),
-                pmod(xxhash64(col(key)), lit(b)).cast("int").as("_bucket")): _*)
-            lwwReduceByKey(projected, key, b)
-          } else if (strategy == "hashed") {
-            // test seam: graft.mor.dedup.hashbits < 64 narrows the winner
-            // hash so specs can force real collisions and prove the
-            // documented contract (reads/compaction reconcile; LWW feed
-            // consumers converge). Unset → plain xxhash64, the production
-            // path, byte-identical to before the seam existed.
-            def wh: Column = {
-              val h = xxhash64(col(key), col("lsn"))
-              sys.props.get("graft.mor.dedup.hashbits")
-                .map(b => pmod(h, lit(1L << b.toInt)))
-                .getOrElse(h)
-            }
-            val maxH = maxLsnOf(observedBatch, key, effectiveSalt)
-              .select(wh.as("__wh"))
-            observedBatch
-              .withColumn("__wh", wh)
-              .join(broadcast(maxH), Seq("__wh"), "left_semi")
-              .select(
-                (col(key) +: valueCols.map(col)) ++ Seq(
-                  col("lsn").as("_lsn"),
-                  (col("op") === "D").as("_deleted"),
-                  pmod(xxhash64(col(key)), lit(b)).cast("int").as("_bucket")): _*)
-              .transform(repartitionByBucket(_, b))
-          } else {
-            source.select(
-              (col(key) +:
-                valueCols.map(c => col(s"__s_$c").as(c))) ++
-                Seq(
-                  col("__s_lsn").as("_lsn"),
-                  (col("__s_op") === "D").as("_deleted"),
-                  pmod(xxhash64(col(key)), lit(b)).cast("int").as("_bucket")): _*)
-              // bucket-aligned repartition bounds file count to numBuckets
-              // per batch (without it each task writes every bucket dir:
-              // tasks×buckets small files, which kills subsequent reads)
-              .transform(repartitionByBucket(_, b))
-          }
-        // key-sorting delta files clusters each url's row runs for read
-        // locality + compression, at the cost of one extra in-memory pass
-        // over the payloads per batch. Deltas are transient (folded into
-        // base at compaction, which re-sorts) — skippable via
-        // SPARK_GRAFT_DELTA_SORT=0 when ingest throughput matters more
-        // than delta-read locality.
-        val sortDelta = sys.env.getOrElse("SPARK_GRAFT_DELTA_SORT", "1") != "0"
-        val observed = deduped
+        def wh: Column = {
+          val h = xxhash64(col(key), col("lsn"))
+          winnerHashBits.fold(h)(bits => pmod(h, lit(1L << bits)))
+        }
+        val maxH = maxLsnOf(observedBatch, key, effectiveSalt)
+          .select(wh.as("__wh"))
+        observedBatch
+          .withColumn("__wh", wh)
+          .join(broadcast(maxH), Seq("__wh"), "left_semi")
+          .select(
+            (col(key) +: valueCols.map(col)) ++ Seq(
+              col("lsn").as("_lsn"),
+              (col("op") === "D").as("_deleted"),
+              pmod(xxhash64(col(key)), lit(b)).cast("int").as("_bucket")): _*)
+          // bucket-aligned repartition bounds file count to numBuckets per
+          // batch (without it each task writes every bucket dir:
+          // tasks×buckets small files, which kills subsequent reads)
+          .transform(repartitionByBucket(_, b))
           .observe(obsM,
             sum(when(col("_deleted"), 1).otherwise(0)).as("dels"),
             (count(lit(1)).as("rows") +: bucketCountCols(b)): _*)
-        (if (sortDelta) observed.sortWithinPartitions(col(key)) else observed)
+          // key-sorted deltas cluster each url's rows for read locality and
+          // compression (r6: skipping the sort did not win)
+          .sortWithinPartitions(col(key))
           .write.mode("overwrite").option("compression", MergeApply.lakeCodec)
           .partitionBy("_bucket") // clobber crash debris (self-healing)
           .parquet(table.absolute(snapDirRel))
-        dbg("write done")
 
         val srcRow = obsSrc.get; val mRow = obsM.get
         val newFiles = table.listDataFiles(snapDirRel, cur.schemaVersion,
           spark, kind = "delta", rowsByBucket = bucketCounts(mRow, b))
-        dbg("listed files")
         recordDupRatio(table.dir, srcRow)
         val carried = meta.currentSnapshot.map(table.filesOf).getOrElse(Nil)
         val snap = Snapshot(
@@ -377,12 +288,24 @@ object MergeApply {
           currentSnapshotId = Some(snapId),
           snapshots = meta.snapshots :+ snap,
           lastBatch = meta.lastBatch + (stepId -> batchId)))
-        dbg("committed")
         MergeStats(batchId, snapId, skipped = false,
           snap.rowsInserted, 0, snap.rowsDeleted, 0)
 
       case CopyOnWrite =>
         // ---- join + rewrite touched buckets -------------------------------
+        // exact LWW dedup (base files are read unreconciled, so no hash
+        // shortcut): slim max-LSN side broadcast — micro-batches are
+        // bounded, so it is bounded by batch key-cardinality × ~60B and the
+        // payload side never shuffles (measured: shuffled semi joins
+        // anti-scale under local-mode shuffle contention) — then a semi join
+        // back on (key, lsn) fetches the winning payloads, __s_-prefixed
+        // for the full-outer join against current state
+        val source = observedBatch
+          .join(broadcast(maxLsnOf(observedBatch, key, effectiveSalt)),
+            Seq(key, "lsn"), "left_semi")
+          .select(
+            (col(key) +: col("lsn").as("__s_lsn") +: col("op").as("__s_op") +:
+              valueCols.map(c => col(c).as(s"__s_$c"))): _*)
         // touched buckets from the RAW batch's key column (same key set as
         // the deduped source): a narrow column-pruned scan + partial-agg'd
         // distinct of ≤numBuckets values — NOT the dedup agg+join plan,
@@ -390,21 +313,15 @@ object MergeApply {
         val touched: Set[Int] = batch
           .select(pmod(xxhash64(col(key)), lit(b)).cast("int").as("bkt"))
           .distinct().collect().map(_.getInt(0)).toSet
-        dbg(s"touched ${touched.size} buckets")
 
         val target = table.read(spark, Some(touched), includeTombstones = true)
-        // full-outer by key: prefer SHUFFLED HASH over sort-merge (guide
-        // §3.1) — sort-merge sorts FULL PAYLOAD rows on both sides before
-        // merging, two payload sorts the hash join skips entirely. The
-        // build side is the deduped batch (bounded: ≤ batch keys), so the
-        // per-partition hash table stays small at any table size; the
-        // output is re-sorted by key only at the bucket write below.
-        // "auto"/"merge" fall back via SPARK_GRAFT_COW_JOIN.
-        val cowJoin = sys.props.getOrElse("graft.cow.join",
-          sys.env.getOrElse("SPARK_GRAFT_COW_JOIN", "shuffle_hash"))
-        val joined =
-          if (cowJoin == "auto") target.join(source, Seq(key), "full_outer")
-          else target.join(source.hint(cowJoin), Seq(key), "full_outer")
+        // full-outer by key: SHUFFLED HASH, not sort-merge (guide §3.1) —
+        // sort-merge sorts FULL PAYLOAD rows on both sides before merging,
+        // two payload sorts the hash join skips entirely. The build side is
+        // the deduped batch (bounded: ≤ batch keys), so the per-partition
+        // hash table stays small at any table size; the output is re-sorted
+        // by key only at the bucket write below.
+        val joined = target.join(source.hint("shuffle_hash"), Seq(key), "full_outer")
 
         val targetLive = col("_lsn").isNotNull && !coalesce(col("_deleted"), lit(false))
         val srcWins = col("__s_lsn").isNotNull &&
@@ -447,7 +364,6 @@ object MergeApply {
           .write.mode("overwrite").option("compression", MergeApply.lakeCodec)
           .partitionBy("_bucket") // clobber crash debris (self-healing)
           .parquet(table.absolute(snapDirRel))
-        dbg("cow write done")
 
         val srcRow = obsSrc.get; val mergeRow = obsMerge.get
         val newFiles = table.listDataFiles(snapDirRel, cur.schemaVersion, spark,

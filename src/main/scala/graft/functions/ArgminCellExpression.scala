@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedLit}
+import org.apache.spark.sql.functions.typedLit
 import org.apache.spark.sql.types._
 
 /** Nearest-centroid assignment (IVF cell id): argmin over k literal
@@ -108,25 +108,7 @@ object ArgminCellOps {
     best
   }
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("argmin_cell")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "argmin_cell",
-        exprs => {
-          val cd = exprs(1).eval().asInstanceOf[ArrayData]
-          val cents = (0 until cd.numElements())
-            .map(i => cd.getArray(i).toDoubleArray()).toArray
-          ArgminCellExpr(exprs(0), cents)
-        },
-        "built-in")
-  }
-
   /** Column API entry. */
-  def argmin_cell(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("argmin_cell", vec, typedLit(centroids))
-  }
+  def argmin_cell(vec: Column, centroids: Seq[Seq[Double]]): Column =
+    NativeFunctions.call("argmin_cell", vec, typedLit(centroids))
 }

@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Sign-bit LSH bucket id over `planes` fixed hyperplanes — the bucketing
@@ -25,10 +25,12 @@ import org.apache.spark.sql.types._
   * hashing, real codegen.
   *
   * Semantics mirror the HOF spelling bit-for-bit: per-plane projection is
-  * the same left-to-right double fold; a null vector or a vector whose
-  * length differs from `dim` yields bucket 0 (the old zip_with null-padding
-  * collapsed every plane's fold to null, and `when(null > 0).otherwise(0)`
-  * summed to 0).
+  * the same left-to-right double fold. A null vector, a null element or a
+  * vector SHORTER than `dim` yields bucket 0 (zip_with's null-padding of
+  * the vector collapsed every plane's fold to null, and
+  * `when(null > 0).otherwise(0)` summed to 0). Elements PAST `dim` still
+  * count: zip_with padded the index with null, and xxhash64 skips null
+  * inputs, so their sign is that of xxhash64(p) alone.
   */
 case class LshBucketExpr(child: Expression, dim: Int, planes: Int)
     extends UnaryExpression {
@@ -80,25 +82,30 @@ case class LshBucketExpr(child: Expression, dim: Int, planes: Int)
 object LshBucketOps {
   /** signs(p)(j) = +1 iff pmod(xxhash64(j, p), 2) == 0, with the exact
     * chain Spark's two-arg xxhash64 uses on int inputs:
-    * hashInt(p, hashInt(j, 42)). */
+    * hashInt(p, hashInt(j, 42)). The extra column signs(p)(dim) is the sign
+    * of every element past `dim`: xxhash64(null, p) = hashInt(p, 42). */
   def signTable(dim: Int, planes: Int): Array[Array[Double]] =
-    Array.tabulate(planes, dim) { (p, j) =>
-      val h = XXH64.hashInt(p, XXH64.hashInt(j, 42L))
+    Array.tabulate(planes, dim + 1) { (p, j) =>
+      val h =
+        if (j < dim) XXH64.hashInt(p, XXH64.hashInt(j, 42L))
+        else XXH64.hashInt(p, 42L)
       if (((h % 2) + 2) % 2 == 0) 1.0 else -1.0
     }
 
   def compute(a: ArrayData, signs: Array[Array[Double]],
       isFloat: Boolean): Int = {
     val planes = signs.length
-    val dim = signs(0).length
-    if (a.numElements() != dim) return 0
+    val dim = signs(0).length - 1
+    val n = a.numElements()
+    if (n < dim) return 0
     val proj = new Array[Double](planes)
     var j = 0
-    while (j < dim) {
+    while (j < n) {
       if (a.isNullAt(j)) return 0 // old spelling: null element nulls every fold
       val x = if (isFloat) a.getFloat(j).toDouble else a.getDouble(j)
+      val s = math.min(j, dim)
       var p = 0
-      while (p < planes) { proj(p) += x * signs(p)(j); p += 1 }
+      while (p < planes) { proj(p) += x * signs(p)(s); p += 1 }
       j += 1
     }
     var bucket = 0
@@ -107,24 +114,7 @@ object LshBucketOps {
     bucket
   }
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_bucket")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "lsh_bucket",
-        exprs => LshBucketExpr(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue(),
-          exprs(2).eval().asInstanceOf[Number].intValue()),
-        "built-in")
-  }
-
   /** Column API entry. */
-  def lsh_bucket(vec: Column, dim: Int, planes: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("lsh_bucket", vec,
-      org.apache.spark.sql.functions.lit(dim),
-      org.apache.spark.sql.functions.lit(planes))
-  }
+  def lsh_bucket(vec: Column, dim: Int, planes: Int): Column =
+    NativeFunctions.call("lsh_bucket", vec, lit(dim), lit(planes))
 }

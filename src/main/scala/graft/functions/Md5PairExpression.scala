@@ -2,12 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -82,18 +81,7 @@ object Md5Pair128 {
       Array[Any](hi ^ Long.MinValue, lo ^ Long.MinValue))
   }
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("md5_pair128")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "md5_pair128", exprs => Md5PairExpr(exprs(0), exprs(1)), "built-in")
-  }
-
   /** Column API entry. */
-  def md5_pair128(s: Column, suffix: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("md5_pair128", s, suffix)
-  }
+  def md5_pair128(s: Column, suffix: Column): Column =
+    NativeFunctions.call("md5_pair128", s, suffix)
 }

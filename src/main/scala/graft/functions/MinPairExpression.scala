@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Lexicographic MIN over a pair of signed longs — a fixed-width (2×8-byte
@@ -20,10 +19,9 @@ import org.apache.spark.sql.types._
   * buffer mutable: HashAggregate, no sorts, same result bit-for-bit after
   * re-hexing. Used by the md5-basis MinHash signatures (oracle hash-gated).
   *
-  * Null contract (matches built-in `min` / SQL MIN): a row whose FIRST
-  * component is null is skipped (the md5 decomposition produces both
-  * components null together); a group with no non-null rows evaluates to a
-  * null struct.
+  * Null contract (matches built-in `min` / SQL MIN): a row with EITHER
+  * component null is skipped, so the buffer only ever holds a complete
+  * pair; a group with no such rows evaluates to a null struct.
   */
 case class MinLongPair(a: Expression, b: Expression)
     extends DeclarativeAggregate {
@@ -56,10 +54,11 @@ case class MinLongPair(a: Expression, b: Expression)
     Or(LessThan(xa, ya), And(EqualTo(xa, ya), LessThan(xb, yb)))
 
   override lazy val updateExpressions: Seq[Expression] = {
+    val skip = Or(IsNull(a), IsNull(b))
     val take = Or(IsNull(minA), lt(a, b, minA, minB))
     Seq(
-      If(IsNull(a), minA, If(take, a, minA)),
-      If(IsNull(a), minB, If(take, b, minB)))
+      If(skip, minA, If(take, a, minA)),
+      If(skip, minB, If(take, b, minB)))
   }
 
   override lazy val mergeExpressions: Seq[Expression] = {
@@ -82,18 +81,7 @@ case class MinLongPair(a: Expression, b: Expression)
 }
 
 object MinPairExpression {
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("min_long_pair")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "min_long_pair", exprs => MinLongPair(exprs(0), exprs(1)), "built-in")
-  }
-
   /** Column API entry. */
-  def min_long_pair(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("min_long_pair", a, b)
-  }
+  def min_long_pair(a: Column, b: Column): Column =
+    NativeFunctions.call("min_long_pair", a, b)
 }

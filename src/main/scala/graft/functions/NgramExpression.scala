@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,21 +95,6 @@ object WordNgrams {
 }
 
 object NgramExpression {
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("word_ngrams")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "word_ngrams",
-        exprs => WordNgramsExpr(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue()),
-        "built-in")
-  }
-
-  def word_ngrams(text: Column, n: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    org.apache.spark.sql.functions.call_function(
-      "word_ngrams", text, org.apache.spark.sql.functions.lit(n))
-  }
+  def word_ngrams(text: Column, n: Int): Column =
+    NativeFunctions.call("word_ngrams", text, org.apache.spark.sql.functions.lit(n))
 }

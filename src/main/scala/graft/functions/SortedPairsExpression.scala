@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Generator emitting all index-ordered pairs (arr[i], arr[j]), i < j, of
@@ -75,18 +74,6 @@ case class SortedPairsExpr(child: Expression)
 }
 
 object SortedPairs {
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_pairs")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "sorted_pairs", exprs => SortedPairsExpr(exprs(0)), "built-in")
-  }
-
   /** Column API entry; yields columns (i, j) when selected. */
-  def sorted_pairs(arr: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("sorted_pairs", arr)
-  }
+  def sorted_pairs(arr: Column): Column = NativeFunctions.call("sorted_pairs", arr)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -26,10 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * non-null input; null in → null out (same as the HOF form under the
   * default non-legacy size(null) behavior).
   */
-case class TokenSetCountExpr(child: Expression, wordsCsv: String)
+case class TokenSetCountExpr(child: Expression, words: Seq[String])
     extends UnaryExpression {
 
-  require(wordsCsv.nonEmpty, "word set must be non-empty")
+  require(words.nonEmpty, "word set must be non-empty")
 
   override val nullIntolerant: Boolean = true
   override def dataType: DataType = IntegerType
@@ -39,16 +39,14 @@ case class TokenSetCountExpr(child: Expression, wordsCsv: String)
     else TypeCheckResult.TypeCheckFailure(
       s"token_set_count expects string, got ${child.dataType}")
 
-  // comma-separated constructor form so the registry lambda can fold the
-  // word-list literal (same pattern as word_ngrams' n)
-  @transient private lazy val words: Array[Array[Byte]] =
-    wordsCsv.split(",").map(_.getBytes(StandardCharsets.UTF_8))
+  @transient private lazy val wordBytes: Array[Array[Byte]] =
+    words.map(_.getBytes(StandardCharsets.UTF_8)).toArray
 
   override def nullSafeEval(v: Any): Any =
-    TokenSetCount.compute(v.asInstanceOf[UTF8String], words)
+    TokenSetCount.compute(v.asInstanceOf[UTF8String], wordBytes)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wordsRef = ctx.addReferenceObj("words", words, "byte[][]")
+    val wordsRef = ctx.addReferenceObj("words", wordBytes, "byte[][]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.TokenSetCount.compute($c, $wordsRef);")
   }
@@ -91,22 +89,9 @@ object TokenSetCount {
     count
   }
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("token_set_count")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "token_set_count",
-        exprs => TokenSetCountExpr(exprs(0),
-          exprs(1).eval().asInstanceOf[UTF8String].toString),
-        "built-in")
-  }
-
-  /** Column API entry. */
-  def token_set_count(text: Column, words: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    org.apache.spark.sql.functions.call_function("token_set_count", text,
-      org.apache.spark.sql.functions.lit(words.mkString(",")))
-  }
+  /** Column API entry; the word set travels as an array literal, so any
+    * word (commas included) matches exactly. */
+  def token_set_count(text: Column, words: Seq[String]): Column =
+    NativeFunctions.call("token_set_count", text,
+      org.apache.spark.sql.functions.typedLit(words))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native Catalyst dot product over two numeric-array columns — the hot
@@ -101,17 +100,7 @@ case class DotProductExpr(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  /** Register `dot_product` in the session's function registry (idempotent —
-    * skips if present, so per-call registration stays silent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "dot_product", exprs => DotProductExpr(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Column API entry (requires register() once per session). */
+  /** Column API entry. */
   def dot_product(a: Column, b: Column): Column =
-    call_function("dot_product", a, b)
+    NativeFunctions.call("dot_product", a, b)
 }

@@ -336,10 +336,7 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
         // (key, lww) pairs are unique: LSNs are unique in the WAL and
         // batchId dedup prevents re-applied batches writing duplicates.
         // The delta-key side is slim and bounded; AQE picks broadcast from
-        // runtime stats (override via SPARK_GRAFT_DEDUP_JOIN).
-        val hintName = sys.env.getOrElse("SPARK_GRAFT_DEDUP_JOIN", "auto")
-        def hinted(df: DataFrame): DataFrame =
-          if (hintName == "auto") df else df.hint(hintName)
+        // runtime stats, so no hint.
         if (baseFiles.isEmpty) {
           // delta-only fast path (fresh table / first compaction / pure
           // delta buckets): with no base rows, "base rows of delta keys"
@@ -348,15 +345,15 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
           // weight — reconcile the deltas directly by max-LSN per key.
           // Halves the plan of a fresh-table read (the q_cdc_merge /
           // q_change_feed shape) and trims first compactions.
-          val maxL = hinted(delta.groupBy(col(key)).agg(max(col(lww)).as(lww)))
+          val maxL = delta.groupBy(col(key)).agg(max(col(lww)).as(lww))
           readRaw(spark, m, cleanFiles)
             .unionByName(delta.join(maxL, Seq(key, lww), "left_semi"))
         } else {
-          val deltaKeys = hinted(delta.select(col(key)).distinct())
+          val deltaKeys = delta.select(col(key)).distinct()
           val affected = base.join(deltaKeys, Seq(key), "left_semi")
             .unionByName(delta)
           val untouchedBase = base.join(deltaKeys, Seq(key), "left_anti")
-          val maxL = hinted(affected.groupBy(col(key)).agg(max(col(lww)).as(lww)))
+          val maxL = affected.groupBy(col(key)).agg(max(col(lww)).as(lww))
           readRaw(spark, m, cleanFiles)
             .unionByName(untouchedBase)
             .unionByName(affected.join(maxL, Seq(key, lww), "left_semi"))
@@ -379,17 +376,15 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
     * key changed in k commits of the window appears k times, LSN-ordered
     * within each commit's slice.
     *
-    * PROBABILISTIC FEED CONTRACT under the default hashed MOR dedup
-    * (MergeApply `SPARK_GRAFT_MOR_DEDUP=hashed`): the writer dedups each
-    * batch through a semi join on xxhash64(key, lsn), so an in-batch hash
+    * PROBABILISTIC FEED CONTRACT: the MOR writer dedups each batch through
+    * a semi join on xxhash64(key, lsn) (MergeApply), so an in-batch hash
     * collision (p ≈ keys·rows / 2^64 per batch) can land one EXTRA
     * lower-LSN row for a key inside a single commit's slice. The feed
     * emits raw delta rows and does not reconcile them — consumers that
     * reduce per key by max LSN (the documented events → MergeApply LWW
     * shape) converge identically; a consumer doing plain arithmetic
     * aggregation over the feed would double-count at that probability.
-    * Run the writer with `SPARK_GRAFT_MOR_DEDUP=broadcast` for a table
-    * whose feed consumers need the strict exactly-k-times contract.
+    * CdcSpec proves the contract at a forced-collision worst case.
     *
     * Cost is O(changes): only each commit's ADDED delta files are read —
     * never the base table. Compaction snapshots (batchId < 0) rewrite

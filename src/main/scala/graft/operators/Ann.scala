@@ -16,13 +16,10 @@ object Ann {
 
   /** Elementwise-double dot product of two numeric-array columns — the
     * native Catalyst expression (fused codegen loop, no intermediate array;
-    * graft.functions.DotProductExpr). Registered lazily on the active
-    * session; identical left-to-right fold as the HOF form below. */
-  def dot(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.VectorExpressions.register)
+    * graft.functions.DotProductExpr); identical left-to-right fold as the
+    * HOF form below. */
+  def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot_product(a, b)
-  }
 
   /** The declarative HOF spelling of the same fold — kept as the reference
     * implementation the native expression is tested against (ExprSpec). */

@@ -389,6 +389,11 @@ object Dedup {
         .as("contaminated_frac"))
   }
 
+  /** Edge-count cutoff of the union-find fast path in [[dupClusters]]
+    * (16 B/edge → ≤128 MB in the task). Specs lower it to force the
+    * iterative path. */
+  @volatile private[graft] var localClusterMaxEdges: Long = 8000000L
+
   /** Duplicate clusters from candidate pairs — the terminal step of every
     * near-dup pipeline (keep one doc per TRANSITIVE duplicate group, not
     * per pair): connected components by iterative min-label propagation.
@@ -413,10 +418,10 @@ object Dedup {
     * Round files accumulate under the dir for the duration of the call —
     * O(rounds × labels) bytes; the caller owns the dir's lifecycle.
     *
-    * Small graphs (≤ SPARK_GRAFT_CLUSTER_LOCAL_MAX edges, default 8M) with
-    * integral ids and no reliable-checkpoint contract short-circuit to
-    * union-find in a single executor task — identical labels, one job
-    * instead of rounds × (join+agg+ckpt+count). */
+    * Small graphs (≤ [[localClusterMaxEdges]] edges) with integral ids and
+    * no reliable-checkpoint contract short-circuit to union-find in a
+    * single executor task — identical labels, one job instead of rounds ×
+    * (join+agg+ckpt+count). */
   def dupClusters(pairs: DataFrame, maxIters: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
@@ -437,13 +442,13 @@ object Dedup {
     // The cutoff (16 B/edge → ≤128 MB in the task) keeps it a bounded
     // executor-side computation, never a driver collect; larger graphs take
     // the iterative min-label propagation below, unchanged.
-    val edgeCount = edges.count()
+    // The edge count is a job of its own, so it runs only when the other
+    // two conditions already admit the fast path.
     val integralIds = edges.schema.fields.forall(f =>
       f.dataType == org.apache.spark.sql.types.LongType ||
         f.dataType == org.apache.spark.sql.types.IntegerType)
-    val fastPathMax = sys.props.getOrElse("graft.cluster.localMax",
-      sys.env.getOrElse("SPARK_GRAFT_CLUSTER_LOCAL_MAX", "8000000")).toLong
-    if (edgeCount <= fastPathMax && integralIds && checkpointDir.isEmpty) {
+    if (integralIds && checkpointDir.isEmpty &&
+        edges.count() <= localClusterMaxEdges) {
       import spark.implicits._
       val longEdges = edges.select(
         col("a").cast("long"), col("b").cast("long")).as[(Long, Long)]

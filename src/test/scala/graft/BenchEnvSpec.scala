@@ -61,4 +61,25 @@ class BenchEnvSpec extends AnyFunSuite {
     val huge = Long.MaxValue / 5200 // workingSetBytes multiplies by 1300*4
     assert(!BenchEnv.benchRoot(huge).startsWith("/dev/shm"))
   }
+
+  test("only main programs and their BenchEnv harness read env vars or system properties") {
+    // library behaviour is fixed in code: a knob read at the point of use
+    // is a second code path nobody benchmarks. java.io.tmpdir is exempt.
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val read = """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r
+    import scala.jdk.CollectionConverters._
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "BenchEnv.scala")
+      .flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f).asScala.toSeq
+        if (lines.exists(_.contains("def main("))) Nil
+        else lines.zipWithIndex.collect {
+          case (l, i) if read.findFirstIn(l.replace("sys.props(\"java.io.tmpdir\")", "")).isDefined =>
+            s"$f:${i + 1}: ${l.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

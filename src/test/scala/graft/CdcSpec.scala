@@ -133,21 +133,6 @@ class CdcSpec extends SparkSpec {
     assert(checksum(cow.read(spark)) == want)
   }
 
-  test("MOR reduce-by-key dedup strategy converges to the same state") {
-    val cfg = EventGen.Config(nEvents = 6000, nUrls = 400, seed = 77,
-      deleteRatio = 0.1, parallelism = 4)
-    val walDir = tmpDir("wal-reduce")
-    val segs = EventGen.writeWalSegments(spark, cfg, walDir, 3)
-    val events = spark.read.schema(Engine.eventSchema).parquet(walDir + "/*")
-    val want = checksum(Engine.goldenFinalState(events))
-    System.setProperty("graft.mor.dedup", "reduce")
-    try {
-      val t = Engine.createPagesTable(tmpDir("lake-reduce") + "/pages", 4)
-      Engine.replaySegments(spark, segs, t, mode = MergeApply.MergeOnRead)
-      assert(checksum(t.read(spark)) == want)
-    } finally System.clearProperty("graft.mor.dedup")
-  }
-
   test("MOR hashed-broadcast dedup strategy converges to the same state") {
     // the xxhash64(key,lsn) semi join: a collision can admit an extra
     // lower-LSN delta row, which read/compaction reconcile must absorb —
@@ -158,15 +143,12 @@ class CdcSpec extends SparkSpec {
     val segs = EventGen.writeWalSegments(spark, cfg, walDir, 3)
     val events = spark.read.schema(Engine.eventSchema).parquet(walDir + "/*")
     val want = checksum(Engine.goldenFinalState(events))
-    System.setProperty("graft.mor.dedup", "hashed")
-    try {
-      val t = Engine.createPagesTable(tmpDir("lake-hashed") + "/pages", 4)
-      Engine.replaySegments(spark, segs, t, mode = MergeApply.MergeOnRead)
-      assert(checksum(t.read(spark)) == want)
-      // compaction of hashed-written deltas reconciles to the same state too
-      MergeApply.compact(spark, t)
-      assert(checksum(t.read(spark)) == want)
-    } finally System.clearProperty("graft.mor.dedup")
+    val t = Engine.createPagesTable(tmpDir("lake-hashed") + "/pages", 4)
+    Engine.replaySegments(spark, segs, t, mode = MergeApply.MergeOnRead)
+    assert(checksum(t.read(spark)) == want)
+    // compaction of hashed-written deltas reconciles to the same state too
+    MergeApply.compact(spark, t)
+    assert(checksum(t.read(spark)) == want)
   }
 
   test("MOR hashed dedup under FORCED __wh collisions: reads, compaction and feed consumers converge") {
@@ -183,9 +165,7 @@ class CdcSpec extends SparkSpec {
     val segs = EventGen.writeWalSegments(spark, cfg, walDir, 3)
     val events = spark.read.schema(Engine.eventSchema).parquet(walDir + "/*")
     val want = checksum(Engine.goldenFinalState(events))
-    System.setProperty("graft.mor.dedup", "hashed")
-    System.setProperty("graft.mor.dedup.hashbits", "3")
-    try {
+    MergeApply.withWinnerHashBits(3) {
       val t = Engine.createPagesTable(tmpDir("lake-hashcol") + "/pages", 4)
       Engine.replaySegments(spark, segs, t, mode = MergeApply.MergeOnRead)
       assert(checksum(t.read(spark)) == want) // read-side max-LSN reconcile
@@ -202,10 +182,15 @@ class CdcSpec extends SparkSpec {
       assert(reduced.except(state).isEmpty && state.except(reduced).isEmpty)
       MergeApply.compact(spark, t)
       assert(checksum(t.read(spark)) == want) // compaction reconcile
-    } finally {
-      System.clearProperty("graft.mor.dedup")
-      System.clearProperty("graft.mor.dedup.hashbits")
     }
+  }
+
+  test("winner-hash hook rejects widths outside 1..62") {
+    // 63 bits gives a negative modulus; 64 wraps (1L << 64 == 1), collapsing
+    // every hash to 0; 0 leaves a single hash value
+    for (bits <- Seq(0, 63, 64))
+      intercept[IllegalArgumentException](MergeApply.withWinnerHashBits(bits)(()))
+    assert(MergeApply.withWinnerHashBits(62)(true))
   }
 
   test("property: any batch split of the same log converges to the golden state") {
@@ -257,6 +242,9 @@ class CdcSpec extends SparkSpec {
       .filter(!_._2)
       .count()
     assert(bad == 0L)
+    // the Column form (the extract_text UDF over binary html) agrees
+    val udfText = graft.functions.TextExtract.extract_text($"html")
+    assert(events.toDF.filter(udfText.isNull || udfText =!= $"text").count() == 0L)
   }
 
   test("streaming: file-source tail + foreachBatch reaches the same state") {

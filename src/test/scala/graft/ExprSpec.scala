@@ -1,36 +1,10 @@
 package graft
 
-import graft.functions.{ExtractTextExpr, TextExtract}
 import org.apache.spark.sql.functions._
 
-/** Native Catalyst expression vs UDF equivalence for the text extractor. */
+/** Native Catalyst expressions vs the declarative spellings they replace. */
 class ExprSpec extends SparkSpec {
   import spark.implicits._
-
-  test("extract_text native expression ≡ UDF, usable from SQL and Column API") {
-    ExtractTextExpr.register(spark)
-    val cfg = cdc.EventGen.Config(nEvents = 300, nUrls = 50, seed = 5,
-      parallelism = 2)
-    val df = cdc.EventGen.events(spark, cfg).toDF
-
-    val both = df.select(
-      TextExtract.extract_text(col("html")).as("via_udf"),
-      ExtractTextExpr.extract_text_native(col("html")).as("via_expr"),
-      col("text"))
-    assert(both.filter($"via_udf" =!= $"via_expr").count() == 0)
-    assert(both.filter($"via_expr" =!= $"text").count() == 0)
-
-    df.createOrReplaceTempView("pages_expr_test")
-    val sqlCount = spark
-      .sql("SELECT count(*) FROM pages_expr_test WHERE extract_text(html) = text")
-      .as[Long].collect().head
-    assert(sqlCount == 300)
-
-    // null-intolerance: null html → null text (prunable by the optimizer)
-    val n = spark.sql("SELECT extract_text(CAST(NULL AS BINARY)) AS t")
-      .as[Option[String]].collect().head
-    assert(n.isEmpty)
-  }
 
   test("dot_product native expression ≡ HOF fold, codegen'd, null-safe") {
     import graft.operators.Ann
@@ -68,9 +42,10 @@ class ExprSpec extends SparkSpec {
     val cases = Seq(
       "the quick the fox of and the", "el la de y y", "", " ", "  the  ",
       "nothe the thex", "und der die das", "the", "a a a a", "x y z",
-      "über the straße of", "the  a") // double spaces → empty tokens kept
+      "über the straße of", "the  a", // double spaces → empty tokens kept
+      "a,b the a b") // a word set member containing a comma
     val df = cases.toDF("text").repartition(2)
-    for ((_, words) <- TextAnalysis.markers) {
+    for (words <- TextAnalysis.markers.map(_._2) :+ Seq("a,b", "the")) {
       val both = df.select(
         TextAnalysis.markerCount($"text", words).as("fast"),
         size(filter(split($"text", " "),
@@ -110,6 +85,14 @@ class ExprSpec extends SparkSpec {
     val b = short.select(Ann.lshBucket($"v", 5, 4).as("b"),
       Ann.lshBucketHof($"v", 5, 4).as("r")).collect().head
     assert(b.getInt(0) == 0 && b.getInt(1) == 0)
+    // longer than dim: the HOF still folds the extra elements (null-padded
+    // index, whose xxhash64 skips the null), and so must the native form
+    val long = Seq.tabulate(40)(i => (i.toLong,
+      Array.fill(5 + i % 3)((rnd.nextFloat() - 0.5f) * 4))).toDF("id", "v")
+    val l = long.select(Ann.lshBucket($"v", 3, 8).as("fast"),
+      Ann.lshBucketHof($"v", 3, 8).as("ref"))
+    assert(l.filter($"fast" =!= $"ref").count() == 0)
+    assert(l.filter($"fast" =!= 0).count() > 0)
     // stays in whole-stage codegen
     val q = Seq((1L, Array(1f, 2f, 3f))).toDF("id", "v").repartition(2)
       .select(Ann.lshBucket($"v", 3, 4))

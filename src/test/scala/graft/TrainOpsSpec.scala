@@ -71,6 +71,13 @@ class TrainOpsSpec extends SparkSpec {
     val plan = fast.queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("SortAggregate"), plan)
+    // a row with either component null is skipped, even when its first
+    // component is below the running minimum
+    val pairs = Seq((5L, Option(7L)), (3L, None), (6L, Option(1L))).toDF("a", "b")
+    val m = pairs.select(graft.functions.MinPairExpression
+      .min_long_pair($"a", $"b").as("m")).select($"m.a", $"m.b")
+      .as[(Long, Option[Long])].collect().head
+    assert(m == ((5L, Some(7L))))
   }
 
   test("simhash: identical texts equal, near-dups close in hamming") {
@@ -447,7 +454,7 @@ class TrainOpsSpec extends SparkSpec {
   test("dupClusters: union-find fast path and iterative path agree") {
     // the same random graphs through BOTH code paths: the single-task
     // union-find fast path (default for small graphs) and the iterative
-    // min-label propagation (forced via the sys.prop cutoff = 0)
+    // min-label propagation (forced via the edge cutoff = 0)
     val rnd = new scala.util.Random(7)
     for (_ <- 1 to 3) {
       val n = 40
@@ -457,12 +464,13 @@ class TrainOpsSpec extends SparkSpec {
       }.filter(p => p._1 != p._2).distinct
       val fast = Dedup.dupClusters(pairsSeq.toDF("i", "j"))
         .as[(Long, Long)].collect().toMap
-      System.setProperty("graft.cluster.localMax", "0")
+      val cutoff = Dedup.localClusterMaxEdges
+      Dedup.localClusterMaxEdges = 0
       try {
         val iterative = Dedup.dupClusters(pairsSeq.toDF("i", "j"))
           .as[(Long, Long)].collect().toMap
         assert(fast == iterative)
-      } finally System.clearProperty("graft.cluster.localMax")
+      } finally Dedup.localClusterMaxEdges = cutoff
     }
   }
 
