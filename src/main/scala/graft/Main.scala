@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.Trigger
   * spark-submit --class graft.Main <jar> gen     --out WAL_DIR --events N --segments K [--seed S]
   * spark-submit --class graft.Main <jar> ingest  --wal WAL_DIR --table DIR --checkpoint CKPT
   *                                               [--mode mor|cow] [--continuous SECONDS]
-  *                                               [--buckets B] [--compact-every K] [--salt S]
+  *                                               [--buckets B] [--compact-every K] [--vacuum-every K]
   * spark-submit --class graft.Main <jar> compact --table DIR [--purge-tombstones]
   * spark-submit --class graft.Main <jar> vacuum  --table DIR
   * spark-submit --class graft.Main <jar> catalog --store DIR
@@ -74,7 +74,6 @@ object Main {
           .getOrElse(Trigger.AvailableNow())
         val q = Engine.runStream(spark, o("wal"), o("checkpoint"), table,
           trigger = trigger,
-          saltBuckets = o.getOrElse("salt", "0").toInt,
           mode = mode,
           compactEvery = o.getOrElse("compact-every", "8").toInt,
           vacuumEvery = o.getOrElse("vacuum-every", "0").toInt)

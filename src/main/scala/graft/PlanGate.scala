@@ -1,11 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-round plan regression gate (run: tools/plan_gate.sh): executes the
   * most expensive registered queries plus the CDC merge/read plans and
@@ -17,8 +20,10 @@ import org.apache.spark.sql.execution.window.WindowExec
   *     model-sized side on purpose);
   *  3. WindowExec with an EMPTY partition spec (single-partition global
   *     window — the one-executor bottleneck);
-  *  4. SortAggregateExec in the merge-apply / MOR-read plans (fixed-width
-  *     hash aggregation only — a SortAggregate there means a var-width
+  *  4. SortAggregateExec or WindowExec in the merge-apply write plans (the
+  *     MOR and CoW commits' own writes, captured by a QueryExecutionListener)
+  *     or a SortAggregateExec in the MOR-read plan (fixed-width hash
+  *     aggregation only — a SortAggregate there means a var-width
   *     aggregation buffer snuck back in, the round-1 max_by(struct) trap);
   *  5. in the MOR read plan, every file scan under a BroadcastExchange must
   *     read ONLY delta files (broadcast-of-aggregate-over-base means the
@@ -90,29 +95,57 @@ object PlanGate {
     for (name <- picks)
       auditDf(name, SparkEntry.queries(name)(spark, dir))
 
-    // ---- merge-apply write plan (what every micro-batch executes) --------
+    // ---- merge-apply write plans: the plans MergeApply itself executes ----
+    // captured from the listener bus (a hand-built copy of the plan drifts
+    // from the real write): every data write into a table dir, final plan
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        walk(qe.executedPlan).collectFirst {
+          case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, _) =>
+            cmd.outputPath.toString
+        }.foreach(path => writes.add(path -> qe.executedPlan))
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    /** Audit the final plans of the `n` data writes under `tableDir`
+      * (listener events arrive asynchronously, in order). */
+    def auditWrites(ctx: String, tableDir: String, n: Int): Unit = {
+      import scala.jdk.CollectionConverters._
+      def plans = writes.asScala.toSeq.filter(_._1.contains(tableDir)).map(_._2)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (plans.size < n && System.nanoTime() < deadline) Thread.sleep(50)
+      check(ctx, plans.size == n, s"captured the $n data writes of the commits")
+      val nodes = plans.flatMap(walk)
+      check(ctx, !nodes.exists(_.nodeName.contains("CartesianProduct")),
+        "no cartesian product")
+      check(ctx, !nodes.exists(_.nodeName.contains("SortAggregate")),
+        "hash aggregation only (no var-width SortAggregate)")
+      check(ctx, !nodes.exists(_.isInstanceOf[WindowExec]),
+        "no window in the dedup path")
+    }
+
     import org.apache.spark.sql.functions._
     val events = cdc.EventGen.events(spark,
       cdc.EventGen.Config(nEvents = 20000, nUrls = 2000, parallelism = 4)).toDF
-    val maxL = events.groupBy(col("url")).agg(max(col("lsn")).as("lsn"))
-    val mergeDf = events.join(maxL.hint("broadcast"), Seq("url", "lsn"), "left_semi")
-      .withColumn("_bucket", pmod(xxhash64(col("url")), lit(32)).cast("int"))
-      .repartition(col("_bucket"))
-    val mergeNodes = finalize(mergeDf)
-    check("merge-apply", !mergeNodes.exists(_.nodeName.contains("CartesianProduct")),
-      "no cartesian product")
-    check("merge-apply", !mergeNodes.exists(_.nodeName.contains("SortAggregate")),
-      "hash aggregation only (no var-width SortAggregate)")
-    check("merge-apply", !mergeNodes.exists(_.isInstanceOf[WindowExec]),
-      "no window in the dedup path")
+    val late = events.limit(80).withColumn("lsn", col("lsn") + 1000000L)
+    val tmp = java.nio.file.Files.createTempDirectory("plangate").toString
 
-    // ---- MOR read reconciliation plan -------------------------------------
-    val tdir = java.nio.file.Files.createTempDirectory("plangate-mor").toString + "/pages"
-    val t = cdc.Engine.createPagesTable(tdir, 4)
+    // copy-on-write: a first commit, then one that joins against its state
+    val cow = cdc.Engine.createPagesTable(s"$tmp/cow", 4)
+    cdc.MergeApply(spark, cow, events.limit(10000), 0L, stepId = "gate",
+      mode = cdc.MergeApply.CopyOnWrite)
+    cdc.MergeApply(spark, cow, late, 1L, stepId = "gate", mode = cdc.MergeApply.CopyOnWrite)
+    auditWrites("merge-apply-cow", s"$tmp/cow/", 2)
+
+    // ---- merge-on-read: two delta commits around a compaction, whose
+    // reconciling read is audited below ------------------------------------
+    val t = cdc.Engine.createPagesTable(s"$tmp/mor", 4)
     cdc.MergeApply(spark, t, events.limit(10000), 0L, stepId = "gate")
     cdc.MergeApply.compact(spark, t)
-    cdc.MergeApply(spark, t,
-      events.limit(80).withColumn("lsn", col("lsn") + 1000000L), 1L, stepId = "gate")
+    cdc.MergeApply(spark, t, late, 1L, stepId = "gate")
+    auditWrites("merge-apply", s"$tmp/mor/", 3)
+
+    // ---- MOR read reconciliation plan -------------------------------------
     val morDf = t.read(spark)
     val morNodes = finalize(morDf)
     check("mor-read", !morNodes.exists(_.nodeName.contains("CartesianProduct")),

@@ -64,7 +64,6 @@ object Engine {
       table: LakeTable,
       trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Option[Int] = None,
-      saltBuckets: Int = 0,
       mode: MergeApply.MergeMode = MergeApply.MergeOnRead,
       compactEvery: Int = 8,
       // file GC cadence for CONTINUOUS operation: every K batches, delete
@@ -86,15 +85,7 @@ object Engine {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stats = MergeApply(spark, table, batch, batchId,
-          stepId = "cdc_ingest", saltBuckets = saltBuckets, mode = mode)
-        // bound read amplification: fold deltas into base every K batches
-        if (!stats.skipped && mode == MergeApply.MergeOnRead &&
-          compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          MergeApply.compact(spark, table)
-        // bound on-disk garbage: GC unreferenced files every K batches
-        if (!stats.skipped && vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          table.vacuum()
+        val stats = applyBatch(spark, table, batch, batchId, mode, compactEvery, vacuumEvery)
         if (!stats.skipped) onBatch(stats)
         ()
       }
@@ -109,19 +100,27 @@ object Engine {
       spark: SparkSession,
       segmentPaths: Seq[String],
       table: LakeTable,
-      saltBuckets: Int = 0,
       mode: MergeApply.MergeMode = MergeApply.MergeOnRead,
       compactEvery: Int = 8
   ): Seq[MergeApply.MergeStats] =
     segmentPaths.zipWithIndex.map { case (path, i) =>
-      val batch = spark.read.schema(eventSchema).parquet(path)
-      val stats = MergeApply(spark, table, batch, i.toLong,
-        stepId = "cdc_ingest", saltBuckets = saltBuckets, mode = mode)
-      if (mode == MergeApply.MergeOnRead && compactEvery > 0 &&
-        (i + 1) % compactEvery == 0)
-        MergeApply.compact(spark, table)
-      stats
+      applyBatch(spark, table, spark.read.schema(eventSchema).parquet(path), i.toLong,
+        mode, compactEvery, vacuumEvery = 0)
     }
+
+  /** One batch of the stream or the replay: merge-apply, then maintenance
+    * every K batches — compaction (merge-on-read only) bounds read
+    * amplification, vacuum bounds on-disk garbage. A batch skipped as
+    * already committed runs no maintenance. */
+  private def applyBatch(spark: SparkSession, table: LakeTable, batch: DataFrame,
+      batchId: Long, mode: MergeApply.MergeMode, compactEvery: Int,
+      vacuumEvery: Int): MergeApply.MergeStats = {
+    val stats = MergeApply(spark, table, batch, batchId, stepId = "cdc_ingest", mode = mode)
+    def due(every: Int): Boolean = !stats.skipped && every > 0 && (batchId + 1) % every == 0
+    if (mode == MergeApply.MergeOnRead && due(compactEvery)) MergeApply.compact(spark, table)
+    if (due(vacuumEvery)) table.vacuum()
+    stats
+  }
 
   /** Independent reduction of an event log to final state — the golden
     * oracle (FIXTURES.md F2): last event per url wins; a final Delete means

@@ -38,27 +38,22 @@ import org.apache.spark.sql.functions._
   *    construction. MOR joins on one xxhash64(key, lsn) column (a
   *    collision admits an extra lower-LSN delta row, which reads and
   *    compaction reconcile away); CoW joins exactly on (key, lsn). A
-  *    two-stage salted max (`saltBuckets` > 1, or engaged automatically
-  *    by the previous batch's duplication ratio) covers pathological
-  *    single-key floods per the north_star.
+  *    two-stage salted max, engaged automatically by the previous batch's
+  *    duplication ratio, covers pathological single-key floods per the
+  *    north_star.
   *  - copy-on-write touches only buckets present in the batch (manifest
   *    file pruning); untouched files carry forward without IO.
   *  - stats ride the write via `Observation` — no second pass.
+  *
+  * This object decides WHAT to write (dedup, LWW classification, which
+  * files carry forward); `LakeTable.write` and `LakeTable.commitSnapshot`
+  * own how the files are laid out and how the snapshot is committed.
   */
 object MergeApply {
 
   sealed trait MergeMode
   case object CopyOnWrite extends MergeMode
   case object MergeOnRead extends MergeMode
-
-  /** Parquet codec for every lake data write (deltas, CoW, compaction,
-    * step outputs). zstd: the 32-core merge is BANDWIDTH-bound, not
-    * CPU-bound (BASELINE.md round-5 scaling §3), so the stronger codec's
-    * fewer bytes through the bus/FS beat snappy's cheaper CPU — measured
-    * +10% merge-apply throughput in a same-window A/B (zstd 256.7k vs
-    * snappy 232.8k ev/s at 2M events, local[32]; lz4 244.0k, uncompressed
-    * 248.5k). */
-  private[graft] val lakeCodec: String = "zstd"
 
   final case class MergeStats(
       batchId: Long,
@@ -70,59 +65,12 @@ object MergeApply {
       keptLate: Long
   )
 
-  /** Preimage table for bucket-aligned shuffles: v(k) is an int with
-    * pmod(murmur3(v(k)), b) == k, found by linear search (expected
-    * ~b·ln b probes, memoized per b). Murmur3 with seed 42 is exactly the
-    * hash Spark's HashPartitioning applies to an int partition expression,
-    * so repartitioning on v(_bucket) sends bucket k to shuffle partition k
-    * bijectively. */
-  private val alignedPreimages =
-    new java.util.concurrent.ConcurrentHashMap[Int, Array[Int]]()
-  private[graft] def bucketPreimages(b: Int): Array[Int] =
-    alignedPreimages.computeIfAbsent(b, _ => {
-      val out = Array.fill(b)(-1)
-      var found = 0
-      var v = 0
-      while (found < b) {
-        val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42)
-        val p = ((h % b) + b) % b
-        if (out(p) < 0) { out(p) = v; found += 1 }
-        v += 1
-      }
-      out
-    })
-
-  /** Bucket-aligned repartition for the delta/base writes: exactly one
-    * shuffle partition (→ one write task, one file) per bucket.
-    *
-    * A plain `repartition(col("_bucket"))` hashes the b distinct bucket
-    * values into `spark.sql.shuffle.partitions` slots — birthday collisions
-    * leave ~1/e of the write tasks empty and hand stragglers 2-3 buckets
-    * (guide §2.5: synthetic partition keys with too few distinct values;
-    * measured 20/32 occupied partitions at b=32). Mapping each bucket
-    * through its murmur3 preimage makes bucket→partition the identity: full
-    * write parallelism at every b, still deterministic under task retry. */
-  private[graft] def repartitionByBucket(df: DataFrame, b: Int): DataFrame =
-    df.repartition(b, element_at(lit(bucketPreimages(b)), col("_bucket") + 1))
-
   private def g(m: Map[String, Any], k: String): Long = m.get(k) match {
     case Some(null)    => 0L
     case Some(l: Long) => l
     case Some(i: Int)  => i.toLong
     case _             => 0L
   }
-
-  /** Per-bucket row-count observation columns: ride the write job itself
-    * (task-side stats), so commit needs NO parquet footer reads — the
-    * driver-side serial section per batch shrinks to listing + two small
-    * JSON writes. Bucket count is bounded (≤ numBuckets ≤ a few hundred),
-    * so the extra aggregate width is trivial. */
-  private def bucketCountCols(b: Int): Seq[Column] =
-    (0 until b).map(k =>
-      sum(when(col("_bucket") === k, 1L).otherwise(0L)).as(s"__bkt$k"))
-
-  private def bucketCounts(row: Map[String, Any], b: Int): Map[Int, Long] =
-    (0 until b).map(k => k -> g(row, s"__bkt$k")).toMap
 
   /** Auto-salt memo: per table dir, the last batch's observed duplication
     * ratio (events / approx distinct keys). A stream's key profile is
@@ -146,16 +94,16 @@ object MergeApply {
   /** Slim (key, max-LSN) winners of a batch: a fixed-width
     * `groupBy(key).agg(max(lsn))` (whole-stage-codegen HashAggregate with
     * map-side partial aggregation — a hot key collapses to ≤1 slim row per
-    * input partition). `saltBuckets` > 1 adds an explicit two-stage
-    * reduction for pathological single-key floods. This deliberately
+    * input partition). `salted` adds a two-stage reduction over 16 salt
+    * buckets for pathological single-key floods. This deliberately
     * avoids `max_by(struct(...))`, whose variable-width aggregation buffer
     * forces SortAggregate (two extra sorts of full payloads). A semi join
     * back on (key, lsn) then picks exactly the winners because LSNs are
     * unique within a batch (the WAL contract). */
-  private def maxLsnOf(batch: DataFrame, key: String, saltBuckets: Int): DataFrame =
-    if (saltBuckets > 1)
+  private def maxLsnOf(batch: DataFrame, key: String, salted: Boolean): DataFrame =
+    if (salted)
       batch
-        .groupBy(col(key), pmod(xxhash64(col("lsn")), lit(saltBuckets)).as("__salt"))
+        .groupBy(col(key), pmod(xxhash64(col("lsn")), lit(16)).as("__salt"))
         .agg(max(col("lsn")).as("lsn"))
         .groupBy(col(key)).agg(max(col("lsn")).as("lsn"))
     else
@@ -183,7 +131,6 @@ object MergeApply {
       batch: DataFrame,
       batchId: Long,
       stepId: String = "merge-apply",
-      saltBuckets: Int = 0,
       mode: MergeMode = MergeOnRead,
       // DAG lineage carried into the committed snapshot (incremental steps
       // record the upstream snapshot they consumed + their input checksum)
@@ -202,7 +149,6 @@ object MergeApply {
     val cur = meta.currentSchema
     val valueCols: Seq[String] = cur.fields.map(_.name)
       .filterNot(n => n == key || n == "_lsn" || n == "_deleted")
-    val b = meta.numBuckets
 
     val obsSrc = Observation(s"src-$batchId")
     val observedBatch = batch.observe(
@@ -212,10 +158,8 @@ object MergeApply {
       count(lit(1)).as("events"),
       // duplication ratio feeds the auto-salt memo for the NEXT batch
       approx_count_distinct(col(key)).as("keys"))
-    // auto-salt: saltBuckets == 0 consults the previous batch's duplication
-    // memo; an explicit value (>1 salted, 1 off) is always honored
-    val effectiveSalt =
-      if (saltBuckets == 0 && saltAutoEngaged(table.dir)) 16 else saltBuckets
+    // auto-salt: the previous batch's duplication memo picks this batch's plan
+    val salted = saltAutoEngaged(table.dir)
 
     mode match {
       case MergeOnRead =>
@@ -238,57 +182,28 @@ object MergeApply {
         // that probability (the documented probabilistic feed contract —
         // see LakeTable.changesBetween). The CoW path writes base files
         // that are read UNRECONCILED — it keeps the exact (key, lsn) join.
-        val snapId = meta.currentSnapshotId.getOrElse(0L) + 1
-        val snapDirRel = s"data/snap-$snapId"
-        val obsM = Observation(s"mor-$batchId")
         def wh: Column = {
           val h = xxhash64(col(key), col("lsn"))
           winnerHashBits.fold(h)(bits => pmod(h, lit(1L << bits)))
         }
-        val maxH = maxLsnOf(observedBatch, key, effectiveSalt)
+        val maxH = maxLsnOf(observedBatch, key, salted)
           .select(wh.as("__wh"))
-        observedBatch
+        val written = table.write(spark, meta, observedBatch
           .withColumn("__wh", wh)
           .join(broadcast(maxH), Seq("__wh"), "left_semi")
           .select(
             (col(key) +: valueCols.map(col)) ++ Seq(
               col("lsn").as("_lsn"),
-              (col("op") === "D").as("_deleted"),
-              pmod(xxhash64(col(key)), lit(b)).cast("int").as("_bucket")): _*)
-          // bucket-aligned repartition bounds file count to numBuckets per
-          // batch (without it each task writes every bucket dir:
-          // tasks×buckets small files, which kills subsequent reads)
-          .transform(repartitionByBucket(_, b))
-          .observe(obsM,
-            sum(when(col("_deleted"), 1).otherwise(0)).as("dels"),
-            (count(lit(1)).as("rows") +: bucketCountCols(b)): _*)
-          // key-sorted deltas cluster each url's rows for read locality and
-          // compression (r6: skipping the sort did not win)
-          .sortWithinPartitions(col(key))
-          .write.mode("overwrite").option("compression", MergeApply.lakeCodec)
-          .partitionBy("_bucket") // clobber crash debris (self-healing)
-          .parquet(table.absolute(snapDirRel))
-
-        val srcRow = obsSrc.get; val mRow = obsM.get
-        val newFiles = table.listDataFiles(snapDirRel, cur.schemaVersion,
-          spark, kind = "delta", rowsByBucket = bucketCounts(mRow, b))
+              (col("op") === "D").as("_deleted")): _*),
+          kind = "delta")
+        val srcRow = obsSrc.get
         recordDupRatio(table.dir, srcRow)
-        val carried = meta.currentSnapshot.map(table.filesOf).getOrElse(Nil)
-        val snap = Snapshot(
-          snapshotId = snapId, parentId = meta.currentSnapshotId,
-          stepId = stepId, batchId = batchId,
-          lsnMin = g(srcRow, "lsnMin"), lsnMax = g(srcRow, "lsnMax"),
-          rowsInserted = g(mRow, "rows") - g(mRow, "dels"),
-          rowsUpdated = 0L, rowsDeleted = g(mRow, "dels"),
-          schemaVersion = cur.schemaVersion,
-          files = carried ++ newFiles,
-          inputSnapshots = inputSnapshots,
-          inputChecksum = inputChecksum)
-        table.commit(meta.copy(version = meta.version + 1,
-          currentSnapshotId = Some(snapId),
-          snapshots = meta.snapshots :+ snap,
-          lastBatch = meta.lastBatch + (stepId -> batchId)))
-        MergeStats(batchId, snapId, skipped = false,
+        val snap = table.commitSnapshot(meta, stepId, batchId,
+          meta.currentSnapshot.map(table.filesOf).getOrElse(Nil) ++ written.files,
+          ledger = true, lsnMin = g(srcRow, "lsnMin"), lsnMax = g(srcRow, "lsnMax"),
+          inserted = written.rows - written.tombstones, deleted = written.tombstones,
+          inputSnapshots = inputSnapshots, inputChecksum = inputChecksum)
+        MergeStats(batchId, snap.snapshotId, skipped = false,
           snap.rowsInserted, 0, snap.rowsDeleted, 0)
 
       case CopyOnWrite =>
@@ -301,7 +216,7 @@ object MergeApply {
         // back on (key, lsn) fetches the winning payloads, __s_-prefixed
         // for the full-outer join against current state
         val source = observedBatch
-          .join(broadcast(maxLsnOf(observedBatch, key, effectiveSalt)),
+          .join(broadcast(maxLsnOf(observedBatch, key, salted)),
             Seq(key, "lsn"), "left_semi")
           .select(
             (col(key) +: col("lsn").as("__s_lsn") +: col("op").as("__s_op") +:
@@ -311,7 +226,7 @@ object MergeApply {
         // distinct of ≤numBuckets values — NOT the dedup agg+join plan,
         // which would run the whole dedup twice just to learn the buckets
         val touched: Set[Int] = batch
-          .select(pmod(xxhash64(col(key)), lit(b)).cast("int").as("bkt"))
+          .select(LakeTable.bucketOf(col(key), meta.numBuckets).as("bkt"))
           .distinct().collect().map(_.getInt(0)).toSet
 
         val target = table.read(spark, Some(touched), includeTombstones = true)
@@ -320,7 +235,7 @@ object MergeApply {
         // two payload sorts the hash join skips entirely. The build side is
         // the deduped batch (bounded: ≤ batch keys), so the per-partition
         // hash table stays small at any table size; the output is re-sorted
-        // by key only at the bucket write below.
+        // by key only at the bucket write.
         val joined = target.join(source.hint("shuffle_hash"), Seq(key), "full_outer")
 
         val targetLive = col("_lsn").isNotNull && !coalesce(col("_deleted"), lit(false))
@@ -349,45 +264,20 @@ object MergeApply {
           Seq(
             when(fromSource, col("__s_lsn")).otherwise(col("_lsn")).as("_lsn"),
             when(fromSource, col("__s_op") === "D")
-              .otherwise(coalesce(col("_deleted"), lit(false))).as("_deleted"),
-            pmod(xxhash64(col(key)), lit(b)).cast("int").as("_bucket"))
+              .otherwise(coalesce(col("_deleted"), lit(false))).as("_deleted"))
 
-        val snapId = meta.currentSnapshotId.getOrElse(0L) + 1
-        val snapDirRel = s"data/snap-$snapId"
-        val obsRows = Observation(s"cow-rows-$batchId")
-        classified
-          .select((outCols :+ col("_action")): _*)
-          .drop("_action")
-          .observe(obsRows, bucketCountCols(b).head, bucketCountCols(b).tail: _*)
-          .transform(repartitionByBucket(_, b))
-          .sortWithinPartitions(col(key))
-          .write.mode("overwrite").option("compression", MergeApply.lakeCodec)
-          .partitionBy("_bucket") // clobber crash debris (self-healing)
-          .parquet(table.absolute(snapDirRel))
-
+        val written = table.write(spark, meta, classified.select(outCols: _*), kind = "base")
         val srcRow = obsSrc.get; val mergeRow = obsMerge.get
-        val newFiles = table.listDataFiles(snapDirRel, cur.schemaVersion, spark,
-          rowsByBucket = bucketCounts(obsRows.get, b))
         recordDupRatio(table.dir, srcRow)
         val carried = meta.currentSnapshot
           .map(s => table.filesOf(s).filterNot(f => touched.contains(f.bucket)))
           .getOrElse(Nil)
-        val snap = Snapshot(
-          snapshotId = snapId, parentId = meta.currentSnapshotId,
-          stepId = stepId, batchId = batchId,
-          lsnMin = g(srcRow, "lsnMin"), lsnMax = g(srcRow, "lsnMax"),
-          rowsInserted = g(mergeRow, "inserted"),
-          rowsUpdated = g(mergeRow, "updated"),
-          rowsDeleted = g(mergeRow, "deleted"),
-          schemaVersion = cur.schemaVersion,
-          files = carried ++ newFiles,
-          inputSnapshots = inputSnapshots,
-          inputChecksum = inputChecksum)
-        table.commit(meta.copy(version = meta.version + 1,
-          currentSnapshotId = Some(snapId),
-          snapshots = meta.snapshots :+ snap,
-          lastBatch = meta.lastBatch + (stepId -> batchId)))
-        MergeStats(batchId, snapId, skipped = false,
+        val snap = table.commitSnapshot(meta, stepId, batchId, carried ++ written.files,
+          ledger = true, lsnMin = g(srcRow, "lsnMin"), lsnMax = g(srcRow, "lsnMax"),
+          inserted = g(mergeRow, "inserted"), updated = g(mergeRow, "updated"),
+          deleted = g(mergeRow, "deleted"),
+          inputSnapshots = inputSnapshots, inputChecksum = inputChecksum)
+        MergeStats(batchId, snap.snapshotId, skipped = false,
           snap.rowsInserted, snap.rowsUpdated, snap.rowsDeleted,
           g(mergeRow, "late"))
     }
@@ -410,39 +300,13 @@ object MergeApply {
     val snapFiles = table.filesOf(snap)
     val deltaBuckets = snapFiles.filter(_.kind == "delta").map(_.bucket).toSet
     if (deltaBuckets.isEmpty) return None
-    val key = meta.bucketColumn
-    val b = meta.numBuckets
-
-    // reconciled state of delta-bearing buckets
-    val state = table
-      .read(spark, Some(deltaBuckets), includeTombstones = !purgeTombstones)
-      .withColumn("_bucket", pmod(xxhash64(col(key)), lit(b)).cast("int"))
-
-    val snapId = snap.snapshotId + 1
-    val snapDirRel = s"data/snap-$snapId"
-    val obsRows = Observation(s"compact-$snapId")
-    state
-      .observe(obsRows, bucketCountCols(b).head, bucketCountCols(b).tail: _*)
-      .transform(repartitionByBucket(_, b))
-      .sortWithinPartitions(col(key))
-      .write.mode("overwrite").option("compression", MergeApply.lakeCodec)
-          .partitionBy("_bucket") // clobber crash debris (self-healing)
-      .parquet(table.absolute(snapDirRel))
-
-    val newFiles = table.listDataFiles(snapDirRel, meta.currentSchemaVersion, spark,
-      rowsByBucket = bucketCounts(obsRows.get, b))
-    val carried = snapFiles
-      .filterNot(f => deltaBuckets.contains(f.bucket))
-    val s = Snapshot(
-      snapshotId = snapId, parentId = Some(snap.snapshotId),
-      stepId = stepId, batchId = -snapId,
-      lsnMin = -1L, lsnMax = -1L,
-      rowsInserted = 0, rowsUpdated = 0, rowsDeleted = 0,
-      schemaVersion = meta.currentSchemaVersion,
-      files = carried ++ newFiles)
-    table.commit(meta.copy(version = meta.version + 1,
-      currentSnapshotId = Some(snapId),
-      snapshots = meta.snapshots :+ s))
+    // reconciled state of delta-bearing buckets, rewritten as base files
+    val written = table.write(spark, meta,
+      table.read(spark, Some(deltaBuckets), includeTombstones = !purgeTombstones),
+      kind = "base")
+    val snapId = table.nextSnapshotId(meta)
+    table.commitSnapshot(meta, stepId, batchId = -snapId,
+      snapFiles.filterNot(f => deltaBuckets.contains(f.bucket)) ++ written.files)
     Some(snapId)
   }
 }

@@ -31,6 +31,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Each step's body builds ONE lazy DataFrame from its inputs, so Catalyst
   * sees the whole step as a single query (predicate pushdown, column
   * pruning, join planning all apply across the step).
+  *
+  * The DAG decides what runs and what lineage it records; the output's
+  * files and snapshots are written by `LakeTable.write` /
+  * `LakeTable.commitSnapshot` (full builds come out key-sorted within each
+  * bucket, with row counts observed by the write).
   */
 final case class Step(
     id: String,
@@ -392,18 +397,9 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
       graft.sources.TableIO.writeSidecar(s"${tableDir(id)}/metadata",
         if (s.isPrivate) m.copy(isPublic = false) else m, "lake"))
     val meta = t.metadata
-    val snapId = meta.currentSnapshotId.get + 1
-    val snap = graft.lake.Snapshot(
-      snapshotId = snapId, parentId = meta.currentSnapshotId,
-      stepId = id, batchId = snapId,
-      lsnMin = -1, lsnMax = -1,
-      rowsInserted = 0, rowsUpdated = 0, rowsDeleted = 0,
-      schemaVersion = cur.schemaVersion,
-      files = t.filesOf(cur), // carried forward — no data rewrite
-      inputSnapshots = ids,
-      inputChecksum = Some(fresh))
-    t.commit(meta.copy(version = meta.version + 1,
-      currentSnapshotId = Some(snapId), snapshots = meta.snapshots :+ snap))
+    t.commitSnapshot(meta, id, batchId = t.nextSnapshotId(meta),
+      t.filesOf(cur), // carried forward — no data rewrite
+      inputSnapshots = ids, inputChecksum = Some(fresh))
     true
   }
 
@@ -476,8 +472,8 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
 
   private def writeOutput(spark: SparkSession, id: String, df0: DataFrame,
       depIds: Map[String, Long]): Unit = {
-    import graft.lake._
-    import org.apache.spark.sql.functions._
+    import graft.lake.LakeField
+    import org.apache.spark.sql.functions.lit
     val t = table(id)
     val step = byId(id)
     val isIncremental = step.incremental.isDefined
@@ -504,28 +500,10 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
         tombstoneColumn = if (isIncremental) Some("_deleted") else None)
     }
     val meta = t.metadata
-    val snapId = meta.currentSnapshotId.getOrElse(0L) + 1
-    val snapDirRel = s"data/snap-$snapId"
-    graft.cdc.MergeApply.repartitionByBucket(
-        df.withColumn("_bucket",
-          pmod(xxhash64(col(meta.bucketColumn)), lit(meta.numBuckets)).cast("int")),
-        meta.numBuckets)
-      .write.mode("overwrite").option("compression", graft.cdc.MergeApply.lakeCodec)
-          .partitionBy("_bucket") // clobber crash debris (self-healing)
-      .parquet(t.absolute(snapDirRel))
-    val files = t.listDataFiles(snapDirRel, meta.currentSchemaVersion, spark)
-    val ids = depIds // captured by the caller BEFORE the step body ran
-    val snap = Snapshot(
-      snapshotId = snapId, parentId = meta.currentSnapshotId,
-      stepId = id, batchId = snapId,
-      lsnMin = -1, lsnMax = -1,
-      rowsInserted = 0, rowsUpdated = 0, rowsDeleted = 0,
-      schemaVersion = meta.currentSchemaVersion,
-      files = files,
-      inputSnapshots = ids,
-      inputChecksum = Some(checksumFrom(step, ids)))
-    t.commit(meta.copy(version = meta.version + 1,
-      currentSnapshotId = Some(snapId), snapshots = meta.snapshots :+ snap))
+    // depIds were captured by the caller BEFORE the step body ran
+    t.commitSnapshot(meta, id, batchId = t.nextSnapshotId(meta),
+      t.write(spark, meta, df, kind = "base").files,
+      inputSnapshots = depIds, inputChecksum = Some(checksumFrom(step, depIds)))
     // private steps stamp their output non-public (DataStepPrivate,
     // tests/test_steps.py:240-245) — even when the step declares no meta
     val sidecarMeta =

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -19,11 +19,19 @@ import scala.jdk.CollectionConverters._
   * <dir>/metadata/version-hint.text      -- current metadata version (atomic rename)
   * <dir>/metadata/v<N>.metadata.json     -- schemas (field-IDs), partition spec,
   *                                          snapshot log with lineage manifests
-  * <dir>/data/snap-<id>/_bucket=<k>/part-....parquet
+  * <dir>/data/snap-<id>/_bucket=<k>/part-....parquet  -- one key-sorted zstd
+  *                                          file per non-empty bucket
   * }}}
   *
+  * This class is the only code that knows that layout: every data file is
+  * written by `write` and every snapshot is built by `commitSnapshot` and
+  * committed by the overridable `commit` — merge-on-read deltas,
+  * copy-on-write rewrites, compactions, DAG step outputs and INSTANT
+  * re-stamps alike. Callers decide what rows to write and which files
+  * carry forward.
+  *
   * Design notes for 100 TB scale:
-  *  - data is hash-bucketed by key (`bucket(url) % B`) — merges prune to
+  *  - data is hash-bucketed by key (`LakeTable.bucketOf`) — merges prune to
   *    touched buckets only (file-level pruning via the manifest, no scan of
   *    the full table);
   *  - commits are copy-on-write: only files in touched buckets are rewritten,
@@ -55,6 +63,13 @@ final case class LakeSchema(schemaVersion: Int, fields: Seq[LakeField]) {
   * into base by compaction. */
 final case class DataFile(path: String, bucket: Int, rows: Long,
     schemaVersion: Int, kind: String = "base")
+
+/** What one [[LakeTable.write]] produced: its data files (one per non-empty
+  * bucket, row counts observed by the write) and how many of their rows are
+  * tombstones. */
+final case class Written(files: Seq[DataFile], tombstones: Long) {
+  def rows: Long = files.map(_.rows).sum
+}
 
 /** A committed table version. `files` is populated when the snapshot was
   * built by a writer in this JVM; snapshots parsed back from metadata carry
@@ -157,7 +172,7 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
       tombstoneColumn = tombstoneColumn,
       retainSnapshots = retainSnapshots)
     fs.mkdirs(metaDir)
-    writeMetadata(meta)
+    commit(meta)
   }
 
   // -------------------------------------------------------------- metadata io
@@ -231,8 +246,6 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
     val fc = FileContext.getFileContext(root.toUri, hadoopConf)
     fc.rename(src, dst, Options.Rename.OVERWRITE)
   }
-
-  private def writeMetadata(meta: TableMetadata): Unit = commit(meta)
 
   /** File list of a snapshot: inline when the snapshot was just built by
     * this writer, else loaded from its manifest file. */
@@ -482,64 +495,95 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
     }.reduce(_.unionByName(_))
   }
 
-  /** Bucket expression for this table's key column. */
-  def bucketExpr(keyCol: String): org.apache.spark.sql.Column =
-    pmod(xxhash64(col(keyCol)), lit(metadata.numBuckets)).cast("int")
+  // -------------------------------------------------------------- write path
 
-  /** List parquet files under a snapshot data dir, with bucket parsed from
-    * the `_bucket=<k>` partition dir. Per-file row counts are the
-    * per-partition lineage metric recorded in each snapshot's manifest.
+  /** Id of the snapshot the next commit on top of `meta` creates. */
+  def nextSnapshotId(meta: TableMetadata): Long = meta.currentSnapshotId.getOrElse(0L) + 1
+
+  /** Write `rows` (current-schema columns) as the `kind` (base|delta) data
+    * files of the next snapshot on top of `meta`: bucketed by the key, one
+    * zstd parquet file per non-empty bucket under `data/snap-<id>`, rows
+    * key-sorted within each file (read locality and compression; r6:
+    * skipping the sort did not win). Overwrite mode clobbers debris of a
+    * crashed attempt at the same snapshot id, so a retry self-heals.
     *
-    * `rowsByBucket` carries TASK-SIDE counts observed during the write
-    * itself (an `Observation` riding the write job): when a bucket maps to
-    * exactly one file — the invariant `repartition(_bucket)` guarantees —
-    * its count is used directly and commit does ZERO parquet footer IO,
-    * keeping the per-batch driver serial section to a listing plus two
-    * small JSON writes. Buckets outside the map (or split across files)
-    * fall back to concurrent footer reads. */
-  def listDataFiles(snapDirRel: String, schemaVersion: Int, spark: SparkSession,
-      kind: String = "base", rowsByBucket: Map[Int, Long] = Map.empty): Seq[DataFile] = {
+    * Per-bucket row counts (and the tombstone count, when the table has a
+    * tombstone column) ride the write as one `Observation` placed after the
+    * shuffle, in the result stage, where each task's update counts once —
+    * so the manifest's row counts come from the write itself and listing
+    * reads no parquet footer. Nothing is committed: pass the files to
+    * [[commitSnapshot]]. */
+  def write(spark: SparkSession, meta: TableMetadata, rows: DataFrame,
+      kind: String): Written = {
+    val b = meta.numBuckets
+    val key = col(meta.bucketColumn)
+    val snapId = nextSnapshotId(meta)
+    val snapDirRel = s"data/snap-$snapId"
+    val counts = meta.tombstoneColumn.toSeq.map(ts =>
+        sum(when(col(ts), 1L).otherwise(0L)).as("tombstones")) ++
+      (0 until b).map(k => sum(when(col("_bucket") === k, 1L).otherwise(0L)).as(s"b$k"))
+    val obs = Observation(s"write-$snapId")
+    repartitionByBucket(rows.withColumn("_bucket", bucketOf(key, b)), b)
+      .observe(obs, counts.head, counts.tail: _*)
+      .sortWithinPartitions(key)
+      .write.mode("overwrite")
+      .option("compression", Codec)
+      .option("maxRecordsPerFile", 0L) // one file per bucket, whatever the session sets
+      .partitionBy("_bucket")
+      .parquet(absolute(snapDirRel))
+    val observed = obs.get
+    def long(name: String): Long = observed.get(name) match {
+      case Some(n: Long) => n
+      case _             => 0L // sum over zero rows is null
+    }
+    Written(listBuckets(snapDirRel, meta.currentSchemaVersion, kind,
+      (0 until b).map(k => k -> long(s"b$k")).toMap), long("tombstones"))
+  }
+
+  /** Commit the next snapshot on top of `meta` through the overridable
+    * [[commit]]: snapshot id, parent, lineage, `version + 1`, the snapshot
+    * appended to the log. `files` is the new snapshot's complete file list
+    * (carried-forward files plus the ones [[write]] returned). `ledger`
+    * records (stepId → batchId) in the exactly-once ledger — set by
+    * merge-apply commits; compactions (batchId < 0) and DAG step outputs
+    * leave the ledger alone. */
+  def commitSnapshot(meta: TableMetadata, stepId: String, batchId: Long,
+      files: Seq[DataFile], ledger: Boolean = false,
+      lsnMin: Long = -1L, lsnMax: Long = -1L,
+      inserted: Long = 0L, updated: Long = 0L, deleted: Long = 0L,
+      inputSnapshots: Map[String, Long] = Map.empty,
+      inputChecksum: Option[String] = None): Snapshot = {
+    val snap = Snapshot(nextSnapshotId(meta), meta.currentSnapshotId, stepId, batchId,
+      lsnMin, lsnMax, inserted, updated, deleted, meta.currentSchemaVersion, files,
+      inputSnapshots, inputChecksum = inputChecksum)
+    commit(meta.copy(version = meta.version + 1,
+      currentSnapshotId = Some(snap.snapshotId),
+      snapshots = meta.snapshots :+ snap,
+      lastBatch = if (ledger) meta.lastBatch + (stepId -> batchId) else meta.lastBatch))
+    snap
+  }
+
+  /** The files [[write]] left under a snapshot data dir, with the bucket
+    * parsed from the `_bucket=<k>` partition dir and the row count the
+    * write observed. The per-bucket dirs are listed CONCURRENTLY: every
+    * commit waits on the listing, and a sequential walk costs ~250 ms at 32
+    * buckets on the local FS (measured). */
+  private def listBuckets(snapDirRel: String, schemaVersion: Int, kind: String,
+      rowsByBucket: Map[Int, Long]): Seq[DataFile] = {
     val snapDir = new Path(root, snapDirRel)
     if (!fs.exists(snapDir)) return Nil
-    // driver-side IO is the per-commit serial section: list the per-bucket
-    // partition dirs CONCURRENTLY (a sequential recursive walk costs
-    // ~250 ms at 32 buckets on the local FS — measured), and read footers
-    // concurrently too when task-side counts are unavailable
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val top = fs.listStatus(snapDir)
-    val (dirs, looseFiles) = top.toSeq.partition(_.isDirectory)
-    val listed: Seq[Path] = Await.result(
-      Future.sequence(dirs.map(d => Future {
-        fs.listStatus(d.getPath).toSeq.filter(_.isFile).map(_.getPath)
-      })), 120.seconds).flatten ++ looseFiles.map(_.getPath)
-    val paths = listed.filter(_.getName.endsWith(".parquet"))
-    def bucketOf(p: Path): Int = p.getParent.getName match {
-      case s if s.startsWith("_bucket=") => s.stripPrefix("_bucket=").toInt
-      case _                             => -1
-    }
-    val filesPerBucket = paths.groupBy(bucketOf).view.mapValues(_.size).toMap
-    val files = paths.map { p =>
-      Future {
-        val bucket = bucketOf(p)
-        val rows =
-          if (filesPerBucket.getOrElse(bucket, 0) == 1 && rowsByBucket.contains(bucket))
-            rowsByBucket(bucket)
-          else footerRowCount(p)
-        DataFile(relativize(p), bucket, rows, schemaVersion, kind)
-      }
-    }
-    Await.result(Future.sequence(files), 120.seconds)
+    val dirs = fs.listStatus(snapDir).toSeq.filter(_.isDirectory).map(_.getPath)
+    Await.result(Future.sequence(dirs.map(d => Future {
+      val bucket = d.getName.stripPrefix("_bucket=").toInt
+      val files = fs.listStatus(d).toSeq.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      require(files.size <= 1,
+        s"$snapDirRel bucket $bucket holds ${files.size} files; the writer makes one per bucket")
+      files.map(p => DataFile(relativize(p), bucket, rowsByBucket(bucket), schemaVersion, kind))
+    })), 120.seconds).flatten
   }
-
-  /** Row count from the parquet footer (no data pages read). */
-  private def footerRowCount(p: Path): Long =
-    try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hadoopConf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    } catch { case _: Throwable => -1L }
 
   /** Garbage-collect data files and snapshot dirs no longer referenced by
     * any RETAINED snapshot (expired by the retention window or replaced by
@@ -574,11 +618,6 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
     deleted
   }
 
-  def deleteDataDir(snapDirRel: String): Unit = {
-    val p = new Path(root, snapDirRel)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
   def absolute(rel: String): String = new Path(root, rel).toString
 
   /** Table-relative path for a listed file: scheme-free (FileSystem listings
@@ -610,6 +649,54 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
 
 object LakeTable {
   private val mapper = new ObjectMapper()
+
+  /** Parquet codec of every data file. zstd: the 32-core merge is
+    * BANDWIDTH-bound, not CPU-bound (BASELINE.md round-5 scaling §3), so the
+    * stronger codec's fewer bytes through the bus/FS beat snappy's cheaper
+    * CPU — measured +10% merge-apply throughput in a same-window A/B (zstd
+    * 256.7k vs snappy 232.8k ev/s at 2M events, local[32]; lz4 244.0k,
+    * uncompressed 248.5k). */
+  private val Codec = "zstd"
+
+  /** The bucket of a key: the one definition the writer, the copy-on-write
+    * touched-bucket probe and the plan gate share. */
+  def bucketOf(key: Column, numBuckets: Int): Column =
+    pmod(xxhash64(key), lit(numBuckets)).cast("int")
+
+  /** Preimage table for bucket-aligned shuffles: v(k) is an int with
+    * pmod(murmur3(v(k)), b) == k, found by linear search (expected
+    * ~b·ln b probes, memoized per b). Murmur3 with seed 42 is exactly the
+    * hash Spark's HashPartitioning applies to an int partition expression,
+    * so repartitioning on v(_bucket) sends bucket k to shuffle partition k
+    * bijectively. */
+  private val alignedPreimages =
+    new java.util.concurrent.ConcurrentHashMap[Int, Array[Int]]()
+  private[graft] def bucketPreimages(b: Int): Array[Int] =
+    alignedPreimages.computeIfAbsent(b, _ => {
+      val out = Array.fill(b)(-1)
+      var found = 0
+      var v = 0
+      while (found < b) {
+        val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42)
+        val p = ((h % b) + b) % b
+        if (out(p) < 0) { out(p) = v; found += 1 }
+        v += 1
+      }
+      out
+    })
+
+  /** Bucket-aligned repartition of the write: exactly one shuffle partition
+    * (→ one write task, one file) per bucket.
+    *
+    * A plain `repartition(col("_bucket"))` hashes the b distinct bucket
+    * values into `spark.sql.shuffle.partitions` slots — birthday collisions
+    * leave ~1/e of the write tasks empty and hand stragglers 2-3 buckets
+    * (guide §2.5: synthetic partition keys with too few distinct values;
+    * measured 20/32 occupied partitions at b=32). Mapping each bucket
+    * through its murmur3 preimage makes bucket→partition the identity: full
+    * write parallelism at every b, still deterministic under task retry. */
+  private[graft] def repartitionByBucket(df: DataFrame, b: Int): DataFrame =
+    df.repartition(b, element_at(lit(bucketPreimages(b)), col("_bucket") + 1))
 
   private def fileToNode(arr: ArrayNode, f: DataFile): Unit = {
     val fo = arr.addObject()

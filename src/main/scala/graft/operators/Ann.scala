@@ -9,25 +9,17 @@ import org.apache.spark.sql.functions._
   * scale paths. All math runs as native fused Catalyst expressions
   * (dot_product, lsh_bucket, argmin_cell — one codegen'd pass each) in
   * double precision with deterministic left-to-right folds,
-  * engine-portable and bit-identical to the declarative HOF spellings
-  * retained here as test references; no UDFs in the hot path.
+  * engine-portable and bit-identical to the declarative HOF spellings kept
+  * as test references (AnnHofs, beside ExprSpec); no UDFs in the hot path.
   */
 object Ann {
 
   /** Elementwise-double dot product of two numeric-array columns — the
     * native Catalyst expression (fused codegen loop, no intermediate array;
     * graft.functions.DotProductExpr); identical left-to-right fold as the
-    * HOF form below. */
+    * HOF reference form. */
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot_product(a, b)
-
-  /** The declarative HOF spelling of the same fold — kept as the reference
-    * implementation the native expression is tested against (ExprSpec). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -66,21 +58,6 @@ object Ann {
     * interpreted (see LshBucketExpression; equivalence test in ExprSpec). */
   def lshBucket(vec: Column, dim: Int, planes: Int): Column =
     graft.functions.LshBucketOps.lsh_bucket(vec, dim, planes)
-
-  /** The declarative HOF spelling — kept as the reference implementation
-    * the native expression is tested against (ExprSpec). */
-  private[graft] def lshBucketHof(vec: Column, dim: Int, planes: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      // sum_j vec[j] * sign(hash(j, p))
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), lit(dim - 1)),
-          (x, j) => x.cast("double") *
-            when(pmod(xxhash64(j, lit(p)), lit(2)) === 0, 1.0).otherwise(-1.0)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1 << p)).otherwise(0)
-    }
-    bits.reduce(_ + _)
-  }
 
   /** LSH-bucketed ANN: queries only compare against targets in the same
     * sign-bit bucket — the scale path (equi-join on bucket id; each bucket
@@ -121,13 +98,6 @@ object Ann {
       .where(col("rn") <= k)
       .drop("rn")
   }
-
-  /** Distance² between a vector column and one literal centroid. */
-  private def sqDistToLit(vec: Column, centroid: Seq[Double]): Column =
-    aggregate(
-      zip_with(vec, typedLit(centroid),
-        (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
-      lit(0.0), (acc, x) => acc + x)
 
   /** Train an IVF coarse quantizer: Lloyd's k-means as pure DataFrame ops.
     * Deterministic: centroids initialize from the k lowest-id vectors; each
@@ -173,26 +143,12 @@ object Ann {
   /** Nearest-centroid assignment (the IVF cell id) as a scan-stage column:
     * argmin over k literal centroids, ties to the lowest cell id — the
     * native ArgminCellExpr (one fused pass, bit-identical distances; the
-    * HOF spelling below ran k interpreted zip_with folds per row and then
+    * HOF spelling ran k interpreted zip_with folds per row and then
     * re-evaluated them under least() + a when-chain). No shuffle, no UDF. */
   def assignCells(vec: Column, centroids: Seq[Seq[Double]]): Column = {
     require(centroids.nonEmpty)
     if (centroids.size == 1) lit(0)
     else graft.functions.ArgminCellOps.argmin_cell(vec, centroids)
-  }
-
-  /** The declarative spelling — kept as the reference implementation the
-    * native expression is tested against (ExprSpec). */
-  private[graft] def assignCellsHof(vec: Column, centroids: Seq[Seq[Double]]): Column = {
-    require(centroids.nonEmpty)
-    val ds = centroids.map(c => sqDistToLit(vec, c))
-    if (ds.size == 1) return lit(0)
-    val minD = least(ds: _*)
-    ds.zipWithIndex.tail
-      .foldLeft(when(ds.head === minD, lit(0))) { case (acc, (d, i)) =>
-        acc.when(d === minD, lit(i))
-      }
-      .otherwise(lit(0))
   }
 
   /** IVF-style ANN with a precomputed coarse cell column: compare only

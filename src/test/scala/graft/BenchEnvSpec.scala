@@ -62,24 +62,43 @@ class BenchEnvSpec extends AnyFunSuite {
     assert(!BenchEnv.benchRoot(huge).startsWith("/dev/shm"))
   }
 
+  /** `file:line: text` of every line of `src/main/scala` that `offends`,
+    * in files not `exempt` (given the path and all its lines). */
+  private def scanMain(exempt: (java.nio.file.Path, Seq[String]) => Boolean)(
+      offends: String => Boolean): List[String] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val lines = java.nio.file.Files.readAllLines(f).asScala.toSeq
+        if (exempt(f, lines)) Nil
+        else lines.zipWithIndex.collect {
+          case (l, i) if offends(l) => s"$f:${i + 1}: ${l.trim}"
+        }
+      }.toList
+  }
+
   test("only main programs and their BenchEnv harness read env vars or system properties") {
     // library behaviour is fixed in code: a knob read at the point of use
     // is a second code path nobody benchmarks. java.io.tmpdir is exempt.
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
     val read = """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r
-    import scala.jdk.CollectionConverters._
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "BenchEnv.scala")
-      .flatMap { f =>
-        val lines = java.nio.file.Files.readAllLines(f).asScala.toSeq
-        if (lines.exists(_.contains("def main("))) Nil
-        else lines.zipWithIndex.collect {
-          case (l, i) if read.findFirstIn(l.replace("sys.props(\"java.io.tmpdir\")", "")).isDefined =>
-            s"$f:${i + 1}: ${l.trim}"
-        }
-      }.toList
+    val offenders = scanMain((f, lines) =>
+      f.getFileName.toString == "BenchEnv.scala" || lines.exists(_.contains("def main("))) {
+      l => read.findFirstIn(l.replace("sys.props(\"java.io.tmpdir\")", "")).isDefined
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("only LakeTable writes data files or builds a Snapshot") {
+    // the file layout (bucket dirs, snapshot dirs, codec) and the snapshot
+    // commit have one home: a second copy drifts from the first
+    val layout = """partitionBy\("_bucket"\)|"data/snap-|option\("compression"|\bSnapshot\(""".r
+    val offenders = scanMain((f, _) =>
+      f.endsWith(java.nio.file.Paths.get("lake", "LakeTable.scala"))) {
+      l => layout.findFirstIn(l).isDefined
+    }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

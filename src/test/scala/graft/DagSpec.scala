@@ -36,6 +36,17 @@ class DagSpec extends SparkSpec {
     val dag = mkDag(store)
     val r1 = dag.run(spark)
     assert(r1.executed == Seq("data/a", "data/b", "data/c"))
+    // each full build's manifest: one file per non-empty bucket, row counts
+    // observed by the write summing to the step's rows
+    for (id <- r1.executed) {
+      val t = dag.table(id)
+      val files = t.filesOf(t.metadata.currentSnapshot.get)
+      val out = t.read(spark)
+      val buckets = out.select(graft.lake.LakeTable.bucketOf($"k", t.metadata.numBuckets))
+        .distinct().as[Int].collect().sorted.toSeq
+      assert(files.map(_.bucket).sorted == buckets, id)
+      assert(files.map(_.rows).sum == out.count(), id)
+    }
     val r2 = dag.run(spark)
     assert(r2.executed.isEmpty && r2.skipped.size == 3)
     val out = dag.table("data/c").read(spark)

@@ -15,7 +15,7 @@ class ExprSpec extends SparkSpec {
     // bit-identical to the interpreted HOF fold (same fold order)
     val diff = vecs.select(
         Ann.dot($"a", $"b").as("native"),
-        Ann.dotHof($"a", $"b").as("hof"))
+        AnnHofs.dotHof($"a", $"b").as("hof"))
       .filter($"native" =!= $"hof")
     assert(diff.count() == 0)
     // cosine built on it matches too
@@ -76,21 +76,21 @@ class ExprSpec extends SparkSpec {
       }.toDF("id", "v").repartition(2)
       val both = vecs.select(
         Ann.lshBucket($"v", dim, planes).as("fast"),
-        Ann.lshBucketHof($"v", dim, planes).as("ref"))
+        AnnHofs.lshBucketHof($"v", dim, planes).as("ref"))
       assert(both.filter($"fast" =!= $"ref").count() == 0,
         s"dim=$dim planes=$planes")
     }
     // degenerate shapes the zip_with null-padding used to collapse to 0
     val short = Seq((1L, Array(1f, 2f))).toDF("id", "v")
     val b = short.select(Ann.lshBucket($"v", 5, 4).as("b"),
-      Ann.lshBucketHof($"v", 5, 4).as("r")).collect().head
+      AnnHofs.lshBucketHof($"v", 5, 4).as("r")).collect().head
     assert(b.getInt(0) == 0 && b.getInt(1) == 0)
     // longer than dim: the HOF still folds the extra elements (null-padded
     // index, whose xxhash64 skips the null), and so must the native form
     val long = Seq.tabulate(40)(i => (i.toLong,
       Array.fill(5 + i % 3)((rnd.nextFloat() - 0.5f) * 4))).toDF("id", "v")
     val l = long.select(Ann.lshBucket($"v", 3, 8).as("fast"),
-      Ann.lshBucketHof($"v", 3, 8).as("ref"))
+      AnnHofs.lshBucketHof($"v", 3, 8).as("ref"))
     assert(l.filter($"fast" =!= $"ref").count() == 0)
     assert(l.filter($"fast" =!= 0).count() > 0)
     // stays in whole-stage codegen
@@ -114,7 +114,7 @@ class ExprSpec extends SparkSpec {
       for (cs <- Seq(cents, withTie)) {
         val both = vecs.select(
           Ann.assignCells($"v", cs).as("fast"),
-          Ann.assignCellsHof($"v", cs).as("ref"))
+          AnnHofs.assignCellsHof($"v", cs).as("ref"))
         assert(both.filter($"fast" =!= $"ref").count() == 0,
           s"dim=$dim k=$k tie=${cs == withTie}")
       }

@@ -320,18 +320,32 @@ class LakeSpec extends SparkSpec {
     val table = cdc.Engine.createPagesTable(dir, 2, retainSnapshots = 2)
     def evd(lsn: Long, url: String) = graft.model.ChangeEvent(
       lsn, "U", url, new java.sql.Timestamp(0), Array.emptyByteArray, s"t$lsn", "en")
-    for (i <- 0 until 6)
-      cdc.MergeApply(spark, table, Seq(evd(i.toLong, s"u${i % 3}")).toDS.toDF,
-        i.toLong, stepId = "cdc_ingest")
-    cdc.MergeApply.compact(spark, table)
-    // per-partition lineage: every manifest file entry has a real row count
+    // a session cap of one row per file must not split a bucket: the writer
+    // makes exactly one file per bucket, whatever the session sets
+    val cap = "spark.sql.files.maxRecordsPerFile"
+    val prevCap = spark.conf.getOption(cap)
+    spark.conf.set(cap, "1")
+    try {
+      for (i <- 0 until 6)
+        cdc.MergeApply(spark, table, Seq(evd(i.toLong, s"u${i % 3}")).toDS.toDF,
+          i.toLong, stepId = "cdc_ingest")
+      // six urls in one batch: some bucket of the two gets ≥ 3 rows
+      cdc.MergeApply(spark, table, (3 until 9).map(j => evd(100L + j, s"u$j")).toDS.toDF,
+        6L, stepId = "cdc_ingest")
+      cdc.MergeApply.compact(spark, table)
+    } finally prevCap.fold(spark.conf.unset(cap))(spark.conf.set(cap, _))
+    // per-partition lineage: one file per bucket, each with its real row count
     val files = table.filesOf(table.metadata.currentSnapshot.get)
-    assert(files.nonEmpty && files.forall(_.rows >= 1))
-    assert(files.map(_.rows).sum == 3) // 3 live urls after compaction
+    assert(files.groupBy(_.bucket).values.forall(_.size == 1), files)
+    val perBucket = table.read(spark).groupBy(LakeTable.bucketOf($"url", 2)).count()
+      .as[(Int, Long)].collect().toMap
+    assert(perBucket.values.max >= 2)
+    assert(files.map(f => f.bucket -> f.rows).toMap == perBucket)
+    assert(files.map(_.rows).sum == 9) // 9 live urls after compaction
     // two more batches age the pre-compaction snapshots (which still carry
     // every delta file forward) out of the retention window → the old delta
     // files become unreferenced garbage
-    for (i <- 6 until 8)
+    for (i <- 7 until 9)
       cdc.MergeApply(spark, table, Seq(evd(i.toLong, s"u${i % 3}")).toDS.toDF,
         i.toLong, stepId = "cdc_ingest")
     def state() = table.read(spark).select("url", "text")

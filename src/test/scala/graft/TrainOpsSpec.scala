@@ -479,13 +479,13 @@ class TrainOpsSpec extends SparkSpec {
     val b = 32
     val df = spark.range(0, 5000)
       .select(concat(lit("u"), $"id").as("url"))
-      .withColumn("_bucket", pmod(xxhash64($"url"), lit(b)).cast("int"))
-    val placed = graft.cdc.MergeApply.repartitionByBucket(df, b)
+      .withColumn("_bucket", graft.lake.LakeTable.bucketOf($"url", b))
+    val placed = graft.lake.LakeTable.repartitionByBucket(df, b)
       .select($"_bucket", spark_partition_id().as("pid"))
       .distinct().as[(Int, Int)].collect()
     assert(placed.nonEmpty && placed.forall { case (bkt, pid) => bkt == pid })
     // and the preimage table really is a bijection for assorted bucket counts
     for (bb <- Seq(1, 4, 8, 32, 64, 100))
-      assert(graft.cdc.MergeApply.bucketPreimages(bb).distinct.length == bb)
+      assert(graft.lake.LakeTable.bucketPreimages(bb).distinct.length == bb)
   }
 }
