@@ -22,6 +22,13 @@ object Queries {
   private def dec(c: Column, scale: Int = 2): Column =
     c.cast(s"decimal(28,$scale)")
   private def d(c: Column): Column = c.cast("double")
+  /** DuckDB's `ROUND(v, 6)` on a double, `round(v * 1e6) / 1e6` with ties
+    * away from zero. Spark's `round(v, 6)` rounds the double's shortest
+    * decimal string instead, so the two split on near-ties: 55.644687499999996
+    * is .687 in Spark but .688 in DuckDB, whose product v * 1e6 rounds to
+    * the tie. The queries in this file use it wherever their oracle rounds
+    * a double with `ROUND(…, 6)`. */
+  private def round6(c: Column): Column = round(c * 1e6, 0) / 1e6
 
   // ------------------------------------------------------------------ scans
 
@@ -86,10 +93,9 @@ object Queries {
     t(spark, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
-        round(
+        round6(
           d(sum(dec(col("l_extendedprice") * col("l_quantity"), 4))) /
-            d(sum(dec(col("l_quantity")))),
-          6).as("wmean_price"))
+            d(sum(dec(col("l_quantity"))))).as("wmean_price"))
       .orderBy("l_returnflag")
 
   val qWeightedMeanSql: String =
@@ -313,7 +319,7 @@ object Queries {
         aggregations = Map("cnt" -> "sum", "v" -> "mean"),
         budget = GroupOps.NanBudget(numAllowedNans = Some(1)))
       .select(col("entity"), col("seg"), col("cnt").cast("long").as("cnt"),
-        round(col("v"), 6).as("v_mean"))
+        round6(col("v")).as("v_mean"))
       .orderBy("entity", "seg")
   }
 
@@ -365,7 +371,7 @@ object Queries {
     t(spark, dir, "events")
       .select(col("event_id"), col("user_id"),
         when(count(col("value")).over(w) >= 4,
-          round(d(sum(dec(col("value"))).over(w)) / count(col("value")).over(w), 6))
+          round6(d(sum(dec(col("value"))).over(w)) / count(col("value")).over(w)))
           .as("rolling7"))
       .orderBy("event_id")
   }
@@ -448,7 +454,7 @@ object Queries {
     WindowOps
       .interpolate(base, Seq("user_id"), "event_id", "v",
         limitArea = Some("inside"))
-      .withColumn("v", round(col("v"), 6))
+      .withColumn("v", round6(col("v")))
       .orderBy("event_id")
   }
 
@@ -509,7 +515,7 @@ object Queries {
         col("o_totalprice"))
     WindowOps
       .explodeByTimeRange(base, "y0", "y1", "yr", Seq("o_totalprice"), scale = true)
-      .withColumn("o_totalprice", round(col("o_totalprice"), 6))
+      .withColumn("o_totalprice", round6(col("o_totalprice")))
       .orderBy("o_orderkey", "yr")
   }
 
@@ -652,8 +658,8 @@ object Queries {
         substring(col("p_type"), 1, 5).as("type_prefix"),
         length(col("p_name")).as("name_len"),
         concat_ws("-", col("p_brand"), col("p_size").cast("string")).as("brand_size"),
-        round(pow(col("p_retailprice"), 0.5), 6).as("price_sqrt"),
-        round(log(col("p_retailprice") + 1.0), 6).as("price_log"),
+        round6(pow(col("p_retailprice"), 0.5)).as("price_sqrt"),
+        round6(log(col("p_retailprice") + 1.0)).as("price_log"),
         pmod(col("p_partkey"), lit(7)).as("mod7"))
       .orderBy("p_partkey")
 
@@ -824,7 +830,7 @@ object Queries {
       .select("event_id", "user_id", "v")
     WindowOps
       .interpolate(base, Seq("user_id"), "event_id", "v")
-      .withColumn("v", round(col("v"), 6))
+      .withColumn("v", round6(col("v")))
       .orderBy("event_id")
   }
 
@@ -892,7 +898,7 @@ object Queries {
       .filter(col("l_orderkey") <= 1000)
       .select(col("l_orderkey"), col("l_linenumber"),
         TableOps.rowSum(Seq("l_quantity", "l_discount", "l_tax"), "total"),
-        round(TableOps.rowProd(Seq("l_quantity", "l_tax"), "prod2"), 6).as("prod2"))
+        round6(TableOps.rowProd(Seq("l_quantity", "l_tax"), "prod2")).as("prod2"))
       .orderBy("l_orderkey", "l_linenumber")
 
   val qRowTotalSql: String =

@@ -3,7 +3,7 @@ package graft.lake
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -133,7 +133,11 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
   import LakeTable._
 
   private val root = new Path(dir)
-  private def fs: FileSystem = root.getFileSystem(hadoopConf)
+  /** The table's own file handles, one per table: `file:` runs on the
+    * fork-free [[LocalFs]] unless `hadoopConf` names a `file:` file system. */
+  private val conf = LocalFs.configure(hadoopConf)
+  private val fs: FileSystem = root.getFileSystem(conf)
+  private lazy val fc = FileContext.getFileContext(root.toUri, conf)
   private val metaDir = new Path(root, "metadata")
   private val hint = new Path(metaDir, "version-hint.text")
 
@@ -191,11 +195,14 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
   /** Atomic commit: write per-snapshot manifest files (immutable, one per
     * snapshot — the metadata json only references them), truncate the
     * snapshot log to the retention window, write v<N+1>.metadata.json, then
-    * swap the version hint with a single overwrite-rename (FileContext
-    * Rename.OVERWRITE) — no delete window, so a crash never leaves the
-    * table pointer missing. Self-healing: a metadata file NEWER than the
-    * committed hint is crash debris from an interrupted writer (the hint
-    * never advanced) and is overwritten — the rename-aside discipline of the
+    * swap the version hint with one overwrite-rename (FileContext
+    * Rename.OVERWRITE). On [[LocalFs]] that is a single `rename(2)` with no
+    * delete window, so a crash never leaves the table pointer missing; on
+    * other schemes (or an explicitly configured `file:` file system) the
+    * swap is as atomic as that scheme's FileContext rename. Self-healing: a
+    * metadata file NEWER than the committed hint is crash debris from an
+    * interrupted writer (the hint never advanced) and is overwritten — the
+    * rename-aside discipline of the
     * reference's partial-output cleanup
     * (/root/reference/etl/steps/__init__.py:435-459).
     * Commits at or below the committed version are rejected (stale/second
@@ -240,12 +247,10 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
     expired.foreach(_.manifestPath.foreach(m => fs.delete(new Path(root, m), false)))
   }
 
-  /** Single atomic overwrite-rename (no delete-then-rename window). */
-  private def overwriteRename(src: Path, dst: Path): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options}
-    val fc = FileContext.getFileContext(root.toUri, hadoopConf)
+  /** Overwrite-rename through FileContext: atomic on [[LocalFs]] (see
+    * [[commit]]), together with the checksum file. */
+  private def overwriteRename(src: Path, dst: Path): Unit =
     fc.rename(src, dst, Options.Rename.OVERWRITE)
-  }
 
   /** File list of a snapshot: inline when the snapshot was just built by
     * this writer, else loaded from its manifest file. */
@@ -529,6 +534,9 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
       .write.mode("overwrite")
       .option("compression", Codec)
       .option("maxRecordsPerFile", 0L) // one file per bucket, whatever the session sets
+      // the manifest is the commit record: no `_SUCCESS` marker (+ its .crc)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .options(LocalFs.writerOptions(spark))
       .partitionBy("_bucket")
       .parquet(absolute(snapDirRel))
     val observed = obs.get
@@ -595,25 +603,20 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
     val live: Set[String] = m.snapshots.flatMap(s => filesOf(s).map(_.path)).toSet
     val dataDir = new Path(root, "data")
     if (!fs.exists(dataDir)) return 0L
+    // a listStatus walk: listFiles would build a LocatedFileStatus per file,
+    // which reads owner and permission (an `ls -ld` child process per file
+    // on a local FS without libhadoop)
+    def parquet(st: FileStatus): Seq[Path] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(parquet)
+      else Seq(st.getPath).filter(_.getName.endsWith(".parquet"))
     var deleted = 0L
-    val it = fs.listFiles(dataDir, true)
-    val toDelete = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.endsWith(".parquet")) {
-        if (!live.contains(relativize(p))) toDelete += p
-      }
-    }
-    toDelete.foreach { p => if (fs.delete(p, false)) deleted += 1 }
-    // drop snapshot dirs left empty (ignore _SUCCESS / partition dirs)
     fs.listStatus(dataDir).foreach { st =>
-      if (st.isDirectory) {
-        val files = fs.listFiles(st.getPath, true)
-        var hasData = false
-        while (files.hasNext && !hasData)
-          hasData = files.next().getPath.getName.endsWith(".parquet")
-        if (!hasData) fs.delete(st.getPath, true)
-      }
+      val (kept, dead) = parquet(st).partition(p => live.contains(relativize(p)))
+      // a snapshot dir left with no live data file goes whole, partition
+      // dirs and checksum files included
+      if (st.isDirectory && kept.isEmpty) {
+        if (fs.delete(st.getPath, true)) deleted += dead.size
+      } else dead.foreach(p => if (fs.delete(p, false)) deleted += 1)
     }
     deleted
   }

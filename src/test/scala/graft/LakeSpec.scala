@@ -375,4 +375,116 @@ class LakeSpec extends SparkSpec {
       assert(reader.read(spark).count() == i + 1)
     }
   }
+
+  private def pageEvent(lsn: Long, url: String) = graft.model.ChangeEvent(
+    lsn, "U", url, new java.sql.Timestamp(0), Array.emptyByteArray, s"t$lsn", "en")
+
+  /** A MOR commit, a CoW commit, a compaction and a vacuum on a fresh
+    * two-bucket table at `dir`. */
+  private def commitPath(dir: String): Unit = {
+    val table = cdc.Engine.createPagesTable(dir, 2, retainSnapshots = 1)
+    cdc.MergeApply(spark, table, Seq(pageEvent(1, "u1"), pageEvent(2, "u2")).toDS.toDF, 0L)
+    cdc.MergeApply(spark, table, Seq(pageEvent(3, "u1")).toDS.toDF, 1L,
+      mode = cdc.MergeApply.CopyOnWrite)
+    cdc.MergeApply.compact(spark, table)
+    assert(table.vacuum() > 0)
+    assert(table.read(spark).count() == 2)
+  }
+
+  test("lake I/O starts no child process: MOR and CoW commits, compaction, vacuum") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    // without libhadoop, Hadoop's local FS forks chmod on every create and
+    // mkdirs, ls -ld when a listing reads permissions, and readlink in
+    // FileContext's overwrite rename; the commands name the paths
+    val base = tmpDir("lake-nofork")
+    val name = java.nio.file.Paths.get(base).getFileName.toString
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try commitPath(base + "/pages")
+    finally rec.stop()
+    val out = java.nio.file.Files.createTempFile("lake-nofork", ".jfr")
+    rec.dump(out)
+    rec.close()
+    val commands = RecordingFile.readAllEvents(out).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command"))
+    java.nio.file.Files.delete(out)
+    val forked = commands.filter(_.contains(name))
+    assert(forked.isEmpty, s"${forked.size} child processes, e.g. ${forked.take(3)}")
+  }
+
+  test("lake files are 0644 and directories 0755; LocalFs sets any mode") {
+    import java.nio.file.{Files, Path => JPath}
+    import java.nio.file.attribute.PosixFilePermissions.{toString => mode}
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("lake-modes") + "/pages"
+    commitPath(dir)
+    val all = Files.walk(java.nio.file.Paths.get(dir)).iterator.asScala.toSeq
+    def modes(ps: Seq[JPath]) = ps.map(p => mode(Files.getPosixFilePermissions(p))).toSet
+    val (dirs, files) = all.partition(Files.isDirectory(_))
+    val names = files.map(_.getFileName.toString)
+    assert(names.exists(_.endsWith(".parquet")) && names.exists(_.startsWith("manifest-")) &&
+      names.exists(_.endsWith(".metadata.json")) && names.contains("version-hint.text"))
+    assert(modes(files) == Set("rw-r--r--"))
+    assert(modes(dirs) == Set("rwxr-xr-x"))
+    // setPermission maps every mode bit, not only the defaults
+    val fs = new LocalFs
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    val f = new org.apache.hadoop.fs.Path(tmpDir("lake-chmod"), "f")
+    fs.create(f).close()
+    for (m <- Seq("640", "600", "711", "457", "000")) {
+      val p = new org.apache.hadoop.fs.permission.FsPermission(m)
+      fs.setPermission(f, p)
+      assert(modes(Seq(java.nio.file.Paths.get(f.toUri.getPath))) == Set(p.toString), m)
+    }
+  }
+
+  test("an explicitly configured file: file system still sees the lake's own I/O") {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    val before = CountingLocalFs.creates.get
+    val t = new LakeTable(tmpDir("lake-explicit") + "/t", conf)
+    t.create(fields, 2, "k", Some("_lsn"), Some("_deleted"))
+    t.commit(t.metadata.copy(version = 2))
+    // create: metadata + hint tmp; commit: the same again
+    assert(CountingLocalFs.creates.get - before >= 4)
+  }
+
+  test("version-hint swap: hint and checksum read back, no temp file left") {
+    val dir = tmpDir("lake-swap") + "/pages"
+    val table = cdc.Engine.createPagesTable(dir, 2)
+    for (i <- 0 until 3)
+      cdc.MergeApply(spark, table, Seq(pageEvent(i.toLong, s"u$i")).toDS.toDF, i.toLong)
+    // the stock local FS verifies the .crc on read
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    val meta = new org.apache.hadoop.fs.Path(dir, "metadata")
+    val in = fs.open(new org.apache.hadoop.fs.Path(meta, "version-hint.text"))
+    val hint = try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    assert(hint == table.metadata.version.toString && hint == "4")
+    val names = new java.io.File(meta.toUri.getPath).list().toSeq
+    assert(names.contains(".version-hint.text.crc"))
+    // neither `.version-hint.<n>.tmp` nor its `..version-hint.<n>.tmp.crc`
+    assert(!names.exists(n => n.contains(".version-hint.") && n.endsWith(".tmp") ||
+      n.endsWith(".tmp.crc")), names)
+  }
+}
+
+/** A local file system that counts creates: stands for an instrumented or
+  * fault-injecting `fs.file.impl`. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def create(f: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    CountingLocalFs.creates.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object CountingLocalFs {
+  val creates = new java.util.concurrent.atomic.AtomicLong()
 }
