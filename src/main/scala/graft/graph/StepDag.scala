@@ -1,8 +1,10 @@
 package graft.graph
 
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, TableMetadata}
 import graft.ops.Checksums
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.control.NonFatal
 
 /** The step DAG (SURVEY.md §7.1 module `graph`) — the reference's compute
   * graph (/root/reference/etl/steps/__init__.py:52 `DAG`, dag/main.yml)
@@ -21,6 +23,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    the metadata version moved, the output's sidecar is re-stamped and a
   *    metadata-only snapshot committed — zero data files rewritten;
   *  - `--force` / `--only` / `--dry-run` flags (command.py:49-163);
+  *    `force` means a FULL rebuild of every selected step, incremental and
+  *    INSTANT-eligible steps included;
   *  - subgraph filtering by regex + downstream closure
   *    (`filter_to_subgraph`, steps/__init__.py:112-172);
   *  - SUBSET dev filtering (config.py:266, steps/__init__.py:581-584): a
@@ -31,6 +35,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Each step's body builds ONE lazy DataFrame from its inputs, so Catalyst
   * sees the whole step as a single query (predicate pushdown, column
   * pruning, join planning all apply across the step).
+  *
+  * Each step's decision — clean, INSTANT, incremental or full — is made
+  * once by `plan`, from one read of the step's output table and one
+  * snapshot-id read per dep; `run` executes it and `eta` counts it.
   *
   * The DAG decides what runs and what lineage it records; the output's
   * files and snapshots are written by `LakeTable.write` /
@@ -119,6 +127,7 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
     // every EXTERNAL input read (missing columns → the filter is skipped
     // for that table). Dev-mode only; part of the input checksum.
     subset: Option[String] = None) {
+  import StepDag._
   private val byId = steps.map(s => s.id -> s).toMap
   require(byId.size == steps.size, "duplicate step ids")
   /** Public/private exclusivity (command.py:997-1002 `_validate_private_steps`):
@@ -195,7 +204,11 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
   }
 
   def tableDir(id: String): String = s"$storeDir/${id.replace('/', '_')}"
-  def table(id: String): LakeTable = new LakeTable(tableDir(id))
+
+  /** One handle per table for the DAG's life: a handle caches no metadata. */
+  private val handles = new java.util.concurrent.ConcurrentHashMap[String, LakeTable]()
+  def table(id: String): LakeTable =
+    handles.computeIfAbsent(id, i => new LakeTable(tableDir(i)))
 
   /** The output table's metadata sidecar (written by full builds, INSTANT
     * commits re-stamp it in place). */
@@ -203,9 +216,9 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
     scala.util.Try(
       graft.sources.TableIO.readSidecar(spark, s"${tableDir(id)}/metadata")._1).toOption
 
-  private def currentSnapshotIdOf(d: String): Long = {
-    val t = table(d)
-    if (t.exists) t.metadata.currentSnapshotId.getOrElse(-1L) else -1L
+  private def metadataOf(id: String): Option[TableMetadata] = {
+    val t = table(id)
+    if (t.exists) Some(t.metadata) else None
   }
 
   /** The DATA half of a step's input checksum from EXPLICIT upstream
@@ -224,25 +237,47 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
   private def checksumFrom(s: Step, ids: Map[String, Long]): String =
     s"${dataChecksumFrom(s, ids)}:${Checksums.md5Hex(s.metaVersion)}"
 
-  private def currentDepIds(s: Step): Map[String, Long] =
-    s.deps.map(d => d -> currentSnapshotIdOf(d)).toMap
+  /** The one decision per step: external steps are clean; `force`, a
+    * missing output or an unstamped snapshot rebuild; otherwise the stored
+    * checksum picks clean (unchanged), INSTANT (only the meta half moved),
+    * incremental (it matches with the change-deps pinned to the snapshot ids
+    * last consumed) or full (anything else moved). */
+  private def plan(s: Step, force: Boolean): Plan =
+    if (s.run == null) Clean
+    else {
+      val meta = metadataOf(s.id)
+      val ids = s.deps.map(d =>
+        d -> metadataOf(d).flatMap(_.currentSnapshotId).getOrElse(-1L)).toMap
+      meta.flatMap(m => m.currentSnapshot.map(m -> _)) match {
+        case Some((m, snap)) if !force && snap.inputChecksum.isDefined =>
+          val stored = snap.inputChecksum.get
+          val from = snap.inputSnapshots.filter { case (d, _) =>
+            s.incremental.exists(_.changeDeps.contains(d)) }
+          if (stored == checksumFrom(s, ids)) Clean
+          else if (stored.startsWith(dataChecksumFrom(s, ids) + ":")) Instant(m, ids)
+          else if (s.incremental.isDefined && stored == checksumFrom(s, ids ++ from))
+            Incremental(m, from, ids)
+          else Full(meta, ids)
+        case _ => Full(meta, ids)
+      }
+    }
 
-  private def inputChecksum(id: String): String = {
-    val s = byId(id)
-    checksumFrom(s, currentDepIds(s))
-  }
+  /** Would a run without `force` build `id`? (External steps never are.) */
+  def isDirty(id: String): Boolean = plan(byId(id), force = false) != Clean
 
-  def isDirty(id: String): Boolean = {
-    val t = table(id)
-    if (!t.exists || t.metadata.currentSnapshotId.isEmpty) return true
-    val stored = t.metadata.currentSnapshot.flatMap(_.inputChecksum)
-    !stored.contains(inputChecksum(id))
+  /** The steps a run with these arguments walks, in topological order. */
+  private def selection(includeRegex: String, downstream: Boolean,
+      includePrivate: Boolean): Seq[String] = {
+    if (!includePrivate) validatePrivateDeps()
+    topoOrder(select(includeRegex, downstream)
+      .filter(id => includePrivate || !byId(id).isPrivate))
   }
 
   /** Execute (dirty steps only unless force), in topo order. Each step's
     * output is committed to its lake table with the input checksum recorded
     * in the snapshot lineage — the `source_checksum` stamp
-    * (steps/__init__.py:501-504). */
+    * (steps/__init__.py:501-504). `force` rebuilds every selected step in
+    * full. */
   def run(
       spark: SparkSession,
       includeRegex: String = ".*",
@@ -257,10 +292,7 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
       // private steps excluded unless requested (the reference's --private)
       includePrivate: Boolean = false
   ): RunReport = {
-    if (!includePrivate) validatePrivateDeps()
-    val selected = select(includeRegex, downstream)
-      .filter(id => includePrivate || !byId(id).isPrivate)
-    val order = topoOrder(selected)
+    val order = selection(includeRegex, downstream, includePrivate)
     val executed = scala.collection.mutable.ArrayBuffer.empty[String]
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     val failed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -274,37 +306,70 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
         // would stamp a lineage that marks the failure consumed — skip, stay
         // dirty, keep walking the independent branches
         blocked += id; dead += id
-      } else {
-        val dirty = s.run != null && (force || isDirty(id))
-        if (!dirty) skipped += id
-        else if (!dryRun) {
+      } else plan(s, force) match {
+        case Clean => skipped += id
+        case _ if dryRun => executed += id
+        case p =>
           val t0 = System.nanoTime()
           try {
-            if (!runInstantIfPossible(spark, id) && !runIncrementalIfPossible(spark, id)) {
-              // capture every dep's snapshot id ONCE, before the step body
-              // builds its plans: a dep committing between plan-build and
-              // write must appear as next run's work, never silently stamped
-              // consumed in this run's lineage
-              val ids = currentDepIds(s)
-              val inputs = s.deps.map(d => d -> readInput(spark, d)).toMap
-              val out = s.run(spark, inputs)
-              writeOutput(spark, id, out, ids)
-            }
+            execute(spark, s, p)
             executed += id
             durations(id) = (System.nanoTime() - t0) / 1e9
           } catch {
-            case scala.util.control.NonFatal(e) if continueOnFailure =>
+            case NonFatal(e) if continueOnFailure =>
               val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
                 .linesIterator.next().take(300)
               System.err.println(s"[graft] step $id FAILED ($msg); continuing")
               failed += id -> msg; dead += id
           }
-        } else executed += id
       }
     }
     if (durations.nonEmpty) writeExecutionTimes(durations.toMap)
     RunReport(executed.toSeq, skipped.toSeq, order, failed.toSeq, blocked.toSeq,
       durations.toMap)
+  }
+
+  /** Carry out a non-clean plan.
+    *  - INSTANT (steps/__init__.py:623-665): re-stamp the sidecar and commit
+    *    a metadata-only snapshot that carries every data file forward. Zero
+    *    data IO; downstream steps still see a new snapshot id (metadata
+    *    edits cascade, as in the reference).
+    *  - Incremental: consume each change-dep's feed over (from, ids] and LWW
+    *    merge-apply the mapped events. Any failure (retention window
+    *    exceeded, upstream rebuilt or CoW-committed) degrades to the full
+    *    build with the same ids — incremental is an optimization, never a
+    *    crash of a dag.run or of the streaming query driving it via onBatch.
+    *  - Full: run the body over every dep and rewrite the output. */
+  private def execute(spark: SparkSession, s: Step, p: Plan): Unit = p match {
+    case Clean =>
+    case Instant(meta, ids) =>
+      writeSidecar(s)
+      val t = table(s.id)
+      t.commitSnapshot(meta, s.id, batchId = t.nextSnapshotId(meta),
+        t.filesOf(meta.currentSnapshot.get), // carried forward — no data rewrite
+        inputSnapshots = ids, inputChecksum = Some(checksumFrom(s, ids)))
+    case Incremental(meta, from, ids) =>
+      val inc = s.incremental.get
+      try {
+        val feeds = inc.changeDeps.map(d =>
+          d -> table(d).changesBetween(spark, from(d), ids(d))).toMap
+        val others = s.deps.filterNot(inc.changeDeps.contains)
+          .map(d => d -> readInput(spark, d)).toMap
+        graft.cdc.MergeApply(spark, table(s.id), inc.mapChanges(spark, feeds, others),
+          // sum of consumed change-dep snapshot ids: strictly increasing
+          // whenever any feed moved — a monotone batchId for the ledger
+          batchId = inc.changeDeps.map(ids).sum, stepId = s"step:${s.id}",
+          inputSnapshots = ids, inputChecksum = Some(checksumFrom(s, ids)))
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(
+            s"[graft] incremental path for step ${s.id} unavailable " +
+              s"(${e.getClass.getSimpleName}: ${e.getMessage}); full rebuild")
+          execute(spark, s, Full(Some(meta), ids))
+      }
+    case Full(meta, ids) =>
+      val inputs = s.deps.map(d => d -> readInput(spark, d)).toMap
+      writeOutput(spark, s, s.run(spark, inputs), meta, ids)
   }
 
   // ------------------------------------------------ execution-time ledger
@@ -357,10 +422,8 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
   def eta(includeRegex: String = ".*", force: Boolean = false,
       downstream: Boolean = false, includePrivate: Boolean = false
   ): (Double, Int) = {
-    if (!includePrivate) validatePrivateDeps()
-    val pending = topoOrder(select(includeRegex, downstream)
-        .filter(id => includePrivate || !byId(id).isPrivate))
-      .filter(id => byId(id).run != null && (force || isDirty(id)))
+    val pending = selection(includeRegex, downstream, includePrivate)
+      .filter(id => plan(byId(id), force) != Clean)
     val known = pending.flatMap(estimatedTime)
     (known.sum, pending.size - known.size)
   }
@@ -378,104 +441,17 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
     }
   }
 
-  /** INSTANT path (steps/__init__.py:623-665): output exists, the DATA part
-    * of the checksum is unchanged, only the metadata version moved →
-    * re-stamp the sidecar and commit a metadata-only snapshot that carries
-    * every data file forward. Zero data IO; downstream steps still see a
-    * new snapshot id (metadata edits cascade, as in the reference). */
-  private def runInstantIfPossible(spark: SparkSession, id: String): Boolean = {
-    val s = byId(id)
-    val t = table(id)
-    if (!t.exists || t.metadata.currentSnapshotId.isEmpty) return false
-    val cur = t.metadata.currentSnapshot.get
-    val stored = cur.inputChecksum.getOrElse(return false)
-    val ids = currentDepIds(s)
-    if (!stored.startsWith(dataChecksumFrom(s, ids) + ":")) return false
-    val fresh = checksumFrom(s, ids)
-    if (stored == fresh) return false // not dirty at all (caller guards)
-    s.meta.foreach(m =>
-      graft.sources.TableIO.writeSidecar(s"${tableDir(id)}/metadata",
-        if (s.isPrivate) m.copy(isPublic = false) else m, "lake"))
-    val meta = t.metadata
-    t.commitSnapshot(meta, id, batchId = t.nextSnapshotId(meta),
-      t.filesOf(cur), // carried forward — no data rewrite
-      inputSnapshots = ids, inputChecksum = Some(fresh))
-    true
-  }
-
-  /** Incremental path: applies when the step has an IncrementalSpec, its
-    * output exists, and pinning every change-dep to the PREVIOUSLY-consumed
-    * snapshot reproduces the stored input checksum (proving code, metadata
-    * and all other deps are unchanged — only change-deps moved). Consumes
-    * each moved dep's change feed and LWW merge-applies the mapped events.
-    * Returns false → caller takes the full-rebuild path; any feed failure
-    * (retention window exceeded, upstream rebuilt/CoW-committed) degrades
-    * to false as well — incremental is an optimization, never a crash. */
-  private def runIncrementalIfPossible(spark: SparkSession, id: String): Boolean = {
-    val s = byId(id)
-    val inc = s.incremental.getOrElse(return false)
-    val t = table(id)
-    if (!t.exists || t.metadata.currentSnapshotId.isEmpty) return false
-    val cur = t.metadata.currentSnapshot.get
-    val stored = cur.inputChecksum.getOrElse(return false)
-    val lastConsumed: Map[String, Long] = inc.changeDeps.map { d =>
-      d -> cur.inputSnapshots.getOrElse(d, return false)
-    }.toMap
-    // capture EVERY dep's snapshot id exactly once: the same ids drive the
-    // gate, the feed windows, and the committed lineage — a concurrent
-    // upstream commit after this point is simply the next run's work, never
-    // silently marked consumed (the re-read race the lineage must not have)
-    val otherIds: Map[String, Long] = s.deps.filterNot(inc.changeDeps.contains)
-      .map(d => d -> currentSnapshotIdOf(d)).toMap
-    val changeToIds: Map[String, Long] = inc.changeDeps.map { d =>
-      val t2 = table(d)
-      d -> (if (t2.exists) t2.metadata.currentSnapshotId.getOrElse(return false)
-            else return false)
-    }.toMap
-    if (checksumFrom(s, lastConsumed ++ otherIds) != stored)
-      return false // something besides the change-deps moved → full rebuild
-    try {
-      val feeds: Map[String, DataFrame] = inc.changeDeps.map { d =>
-        d -> table(d).changesBetween(spark, lastConsumed(d), changeToIds(d))
-      }.toMap
-      val others = s.deps.filterNot(inc.changeDeps.contains)
-        .map(d => d -> readInput(spark, d)).toMap
-      val events = inc.mapChanges(spark, feeds, others)
-      val consumed = changeToIds ++ otherIds
-      graft.cdc.MergeApply(spark, t, events,
-        // sum of consumed change-dep snapshot ids: strictly increasing
-        // whenever any feed moved — a monotone batchId for the ledger
-        batchId = changeToIds.values.sum, stepId = s"step:$id",
-        inputSnapshots = consumed,
-        inputChecksum = Some(checksumFrom(s, consumed)))
-      true
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        // e.g. change window beyond the retained log, or an upstream full
-        // rebuild / CoW commit whose added files are not deltas — the
-        // documented contract degrades to a full rebuild, it never kills a
-        // dag.run (or the streaming query driving it via onBatch)
-        System.err.println(
-          s"[graft] incremental path for step $id unavailable " +
-            s"(${e.getClass.getSimpleName}: ${e.getMessage}); full rebuild")
-        false
-    }
-  }
-
   /** High-watermark LSN across the change-deps' retained snapshot logs —
     * the full-build seed when the step does not propagate `_lsn` itself. */
   private def seedLsn(s: Step): Long =
-    s.incremental.map(_.changeDeps.flatMap { d =>
-      val t = table(d)
-      if (t.exists) t.metadata.snapshots.map(_.lsnMax) else Nil
-    }).getOrElse(Nil).foldLeft(0L)(math.max)
+    s.incremental.toSeq.flatMap(_.changeDeps).flatMap(metadataOf)
+      .flatMap(_.snapshots.map(_.lsnMax)).foldLeft(0L)(math.max)
 
-  private def writeOutput(spark: SparkSession, id: String, df0: DataFrame,
-      depIds: Map[String, Long]): Unit = {
+  private def writeOutput(spark: SparkSession, step: Step, df0: DataFrame,
+      existing: Option[TableMetadata], depIds: Map[String, Long]): Unit = {
     import graft.lake.LakeField
     import org.apache.spark.sql.functions.lit
-    val t = table(id)
-    val step = byId(id)
+    val t = table(step.id)
     val isIncremental = step.incremental.isDefined
     // incremental steps' outputs are LWW tables (merge-apply target). The
     // full build seeds each row's LSN with the step's own `_lsn` column when
@@ -491,27 +467,48 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
         if (seeded.columns.contains("_deleted")) seeded
         else seeded.withColumn("_deleted", lit(false))
       } else df0
-    if (!t.exists) {
+    val meta = existing.getOrElse {
       val fields = df.schema.fields.zipWithIndex.map { case (f, i) =>
         LakeField(i + 1, f.name, f.dataType.sql.toLowerCase, f.nullable)
       }
       t.create(fields.toSeq, numBuckets, df.columns.head,
         lwwColumn = if (isIncremental) Some("_lsn") else None,
         tombstoneColumn = if (isIncremental) Some("_deleted") else None)
+      t.metadata
     }
-    val meta = t.metadata
-    // depIds were captured by the caller BEFORE the step body ran
-    t.commitSnapshot(meta, id, batchId = t.nextSnapshotId(meta),
+    t.commitSnapshot(meta, step.id, batchId = t.nextSnapshotId(meta),
       t.write(spark, meta, df, kind = "base").files,
       inputSnapshots = depIds, inputChecksum = Some(checksumFrom(step, depIds)))
-    // private steps stamp their output non-public (DataStepPrivate,
-    // tests/test_steps.py:240-245) — even when the step declares no meta
-    val sidecarMeta =
+    writeSidecar(step)
+  }
+
+  /** Stamp the output's metadata sidecar. Private steps stamp it non-public
+    * (DataStepPrivate, tests/test_steps.py:240-245) — even when the step
+    * declares no meta. */
+  private def writeSidecar(step: Step): Unit = {
+    val meta =
       if (step.isPrivate)
-        Some(step.meta.getOrElse(graft.model.TableMeta(shortName = id))
+        Some(step.meta.getOrElse(graft.model.TableMeta(shortName = step.id))
           .copy(isPublic = false))
       else step.meta
-    sidecarMeta.foreach(m =>
-      graft.sources.TableIO.writeSidecar(s"${tableDir(id)}/metadata", m, "lake"))
+    meta.foreach(m =>
+      graft.sources.TableIO.writeSidecar(s"${tableDir(step.id)}/metadata", m, "lake"))
   }
+}
+
+object StepDag {
+  /** What a run does with one step (see `plan`). Every non-clean plan
+    * carries the dep snapshot ids read while planning — before any body
+    * runs: they drive the feed windows and are the lineage the commit
+    * records, so a dep committing mid-build is the next run's work, never
+    * silently stamped consumed. `meta` is the output table as planned
+    * (None before its first build). */
+  private sealed trait Plan
+  private case object Clean extends Plan
+  private final case class Full(meta: Option[TableMetadata], ids: Map[String, Long])
+      extends Plan
+  private final case class Instant(meta: TableMetadata, ids: Map[String, Long])
+      extends Plan
+  private final case class Incremental(meta: TableMetadata, from: Map[String, Long],
+      ids: Map[String, Long]) extends Plan
 }

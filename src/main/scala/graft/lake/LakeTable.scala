@@ -129,7 +129,7 @@ final case class TableMetadata(
     lastBatch.get(stepId).exists(batchId <= _)
 }
 
-class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()) {
+class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultConf) {
   import LakeTable._
 
   private val root = new Path(dir)
@@ -448,36 +448,30 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
         files
       }
     }
-    if (added.isEmpty) {
-      val schema = org.apache.spark.sql.types.StructType(
-        m.currentSchema.toStruct.fields :+
-          org.apache.spark.sql.types.StructField("_op",
-            org.apache.spark.sql.types.StringType) :+
-          org.apache.spark.sql.types.StructField("_snapshot_id",
-            org.apache.spark.sql.types.LongType, nullable = false))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else
-      readRaw(spark, m, added,
-        extra = Seq(
-          op.as("_op"),
-          // Greedy `.*` anchors to the LAST `/data/snap-<n>/` segment — a
-          // lake rooted under a scratch dir whose own path contains
-          // `/snap-<n>/` must not stamp rows with the outer number.
-          regexp_extract(input_file_name(), ".*/data/snap-(\\d+)/", 1)
-            .cast("long").as("_snapshot_id")))
+    readRaw(spark, m, added,
+      extra = Seq(
+        op.as("_op"),
+        // Greedy `.*` anchors to the LAST `/data/snap-<n>/` segment — a
+        // lake rooted under a scratch dir whose own path contains
+        // `/snap-<n>/` must not stamp rows with the outer number.
+        regexp_extract(input_file_name(), ".*/data/snap-(\\d+)/", 1)
+          .cast("long").as("_snapshot_id")))
   }
 
   /** Raw rows of the given files projected to the current schema by
     * field-ID — no reconciliation (the compaction/merge input path).
     * `extra` columns are appended INSIDE the scan's stage (so expressions
-    * like `input_file_name()` still see the originating file). */
+    * like `input_file_name()` still see the originating file). No files
+    * gives an empty frame of the same schema: every column nullable, as a
+    * parquet scan reads it. */
   def readRaw(spark: SparkSession, m: TableMetadata, files: Seq[DataFile],
       extra: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
     val cur = m.currentSchema
+    def withExtra(df: DataFrame) = if (extra.isEmpty) df else df.select(col("*") +: extra: _*)
     if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur.toStruct)
+      return withExtra(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(cur.toStruct.fields.map(_.copy(nullable = true)))))
     // group files by the schema version they were written under; each group
     // is one scan with an ID-remap projection, then unionByName
     files.groupBy(_.schemaVersion).map { case (sv, group) =>
@@ -494,9 +488,7 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
       }
       // extras resolve against CURRENT names → second select on top of the
       // ID-remap projection (still the same stage as the scan)
-      val projected = df.select(projection: _*)
-      if (extra.isEmpty) projected
-      else projected.select(col("*") +: extra: _*)
+      withExtra(df.select(projection: _*))
     }.reduce(_.unionByName(_))
   }
 
@@ -652,6 +644,12 @@ class LakeTable(val dir: String, hadoopConf: Configuration = new Configuration()
 
 object LakeTable {
   private val mapper = new ObjectMapper()
+
+  /** The Hadoop conf of a table opened without one, built once per JVM: a
+    * fresh `Configuration` parses core-default.xml and core-site.xml, ~10 ms
+    * per handle. Shared read-only — [[LocalFs.configure]] copies before it
+    * sets anything. */
+  private lazy val defaultConf = new Configuration()
 
   /** Parquet codec of every data file. zstd: the 32-core merge is
     * BANDWIDTH-bound, not CPU-bound (BASELINE.md round-5 scaling §3), so the

@@ -240,43 +240,6 @@ object Dedup {
     summed.select(col(idCol), sig.as("simhash"))
   }
 
-  /** SimHash near-dup candidate pairs with Hamming verification: split the
-    * `bits`-bit signature into `bands` contiguous bit-bands; docs sharing
-    * any band key are candidates (a pair within Hamming distance d < bands
-    * must agree on ≥1 band — pigeonhole), then verify
-    * bit_count(a XOR b) ≤ maxHamming exactly. Same banded equi-join shape
-    * as MinHash LSH: never all-pairs, fan-out bounded per band bucket. */
-  def simhashPairs(
-      signatures: DataFrame, // (idCol, simhash long)
-      idCol: String,
-      bits: Int,
-      bands: Int,
-      maxHamming: Int
-  ): DataFrame = {
-    require(bits % bands == 0, "bits must divide into equal bands")
-    require(maxHamming < bands,
-      "pigeonhole guarantee needs maxHamming < bands (else pairs are missed)")
-    val width = bits / bands
-    val mask = (1L << width) - 1
-    val bandCols = (0 until bands).map { bIdx =>
-      struct(lit(bIdx).as("band"),
-        shiftright(col("simhash"), bIdx * width).bitwiseAND(mask).as("bk"))
-    }
-    val banded = signatures
-      .select(col(idCol), col("simhash"), explode(array(bandCols: _*)).as("b"))
-      .select(col(idCol), col("simhash"),
-        col("b.band").as("band"), col("b.bk").as("bk"))
-    val l = banded.select(col(idCol).as("i"), col("simhash").as("sa"),
-      col("band"), col("bk"))
-    val r = banded.select(col(idCol).as("j"), col("simhash").as("sb"),
-      col("band"), col("bk"))
-    l.join(r, Seq("band", "bk")).where(col("i") < col("j"))
-      .select(col("i"), col("j"),
-        bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
   /** 64-bit SimHash held as FOUR independent 16-bit chunk signatures
     * (`sim0..sim3`) — semantically one 64-bit signature split into 4
     * contiguous 16-bit bands, kept as separate columns so band keys and
@@ -284,9 +247,9 @@ object Dedup {
     * any engine without unsigned 64-bit ints).
     *
     * This is the SCALE parametrization: each band key ranges over 2^16
-    * values, so LSH bucket sizes SHRINK as the corpus grows — unlike the
-    * 16-bit/4-bit-band variant above whose constant 16-value band space
-    * makes candidate pairs grow as n²/16.
+    * values, so LSH bucket sizes SHRINK as the corpus grows — 4-bit bands
+    * of a 16-bit signature would have a constant 16-value band space and
+    * candidate pairs growing as n²/16.
     *
     * Basis hash per token: `md5Based = true` takes hex chars [4c+1, 4c+4]
     * of md5(token) for chunk c (engine-portable — the DuckDB oracle path);

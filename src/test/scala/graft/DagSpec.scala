@@ -125,6 +125,32 @@ class DagSpec extends SparkSpec {
     assert(r3.executed == Seq("derived/tokens") && fullRuns == 2)
   }
 
+  test("force rebuilds an incremental step in full, every time") {
+    import graft.graph.IncrementalSpec
+    val store = tmpDir("dag-force")
+    val src = cdc.Engine.createPagesTable(s"$store/pages", 4)
+    cdc.MergeApply(spark, src, Seq(graft.model.ChangeEvent(1L, "U", "u1",
+        new java.sql.Timestamp(0), Array.emptyByteArray, "a b", "en")).toDS.toDF,
+      0L, stepId = "cdc_ingest")
+    var fullRuns = 0
+    val tokens = Step("derived/tokens", Seq("pages"), "v1",
+      run = (_, in) => { fullRuns += 1; in("pages").select(col("url"), col("_lsn")) },
+      incremental = Some(IncrementalSpec.one("pages") { (_, feed, _) =>
+        feed.select(col("_lsn").as("lsn"), col("_op").as("op"), col("url"))
+      }))
+    val dag = new StepDag(Seq(Step.external("pages"), tokens), store)
+    dag.run(spark)
+    assert(fullRuns == 1 && !dag.isDirty("derived/tokens"))
+    for (n <- 2 to 3) {
+      val before = dag.table("derived/tokens").metadata.currentSnapshotId.get
+      assert(dag.run(spark, force = true).executed == Seq("derived/tokens"))
+      assert(fullRuns == n) // the body ran: no empty feed merge, no ledger skip
+      val snap = dag.table("derived/tokens").metadata.currentSnapshot.get
+      assert(snap.snapshotId == before + 1 && snap.stepId == "derived/tokens")
+    }
+    assert(!dag.isDirty("derived/tokens"))
+  }
+
   test("continuous materialized view: stream onBatch keeps the derived step in sync") {
     import graft.cdc.{Engine, EventGen}
     import graft.graph.IncrementalSpec
@@ -261,16 +287,20 @@ class DagSpec extends SparkSpec {
       Step("data/b", Seq("data/a"), "v1", (_, in) => in("data/a"))
     ), store)
     mk("m1", "Original").run(spark)
-    val filesBefore = mk("m1", "Original").table("data/a").metadata
-      .currentSnapshot.get.files.map(_.path).toSet
+    // parsed snapshots list their files through the manifest (filesOf)
+    def files(dag: StepDag) = {
+      val t = dag.table("data/a")
+      t.filesOf(t.metadata.currentSnapshot.get).map(_.path).toSet
+    }
+    val filesBefore = files(mk("m1", "Original"))
+    assert(filesBefore.nonEmpty)
     assert(mk("m1", "Original").tableMeta(spark, "data/a")
       .get.title.contains("Original"))
     // metadata version bump: the step "executes" but only re-stamps
     val dag2 = mk("m2", "Edited")
     val r = dag2.run(spark)
     assert(r.executed.contains("data/a"))
-    val snap2 = dag2.table("data/a").metadata.currentSnapshot.get
-    assert(snap2.files.map(_.path).toSet == filesBefore) // ZERO new data files
+    assert(files(dag2) == filesBefore) // ZERO new data files
     assert(dag2.tableMeta(spark, "data/a").get.title.contains("Edited"))
     // downstream saw a new snapshot id → Merkle cascade re-ran it
     assert(r.executed.contains("data/b"))

@@ -303,7 +303,9 @@ class LakeSpec extends SparkSpec {
     assert(reduced.except(state).isEmpty && state.except(reduced).isEmpty)
 
     // empty window; bad window; COW commit rejected
-    assert(table.changesBetween(spark, snapEnd, snapEnd).count() == 0)
+    val emptyFeed = table.changesBetween(spark, snapEnd, snapEnd)
+    assert(emptyFeed.count() == 0)
+    assert(emptyFeed.schema == feed.schema) // one code path, one schema
     intercept[IllegalArgumentException] {
       table.changesBetween(spark, snapEnd + 5, snapEnd + 9)
     }

@@ -103,20 +103,6 @@ class TrainOpsSpec extends SparkSpec {
     assert(ivf.map(_._2).toSet == Set(1L, 2L)) // cell 1 (vec 3) pruned away
   }
 
-  test("simhash banded pairs: exact dup at hamming 0; unrelated not paired") {
-    val sig = Dedup.simhash(docs, "doc_id", "text", bits = 16)
-    val pairs = Dedup.simhashPairs(sig, "doc_id", bits = 16, bands = 4,
-        maxHamming = 3)
-      .as[(Long, Long, Int)].collect()
-    val byPair = pairs.map(p => (p._1, p._2) -> p._3).toMap
-    assert(byPair.get((1L, 4L)).contains(0)) // exact dup: hamming 0
-    assert(!byPair.keySet.exists(p => p._1 == 3L || p._2 == 3L))
-    // pigeonhole guard: maxHamming must be < bands
-    intercept[IllegalArgumentException] {
-      Dedup.simhashPairs(sig, "doc_id", 16, 4, maxHamming = 4)
-    }
-  }
-
   test("simhash wide (64-bit production path): planted near-dups at hamming ≤3 recovered") {
     // xxhash64 basis (production default) — the scale parametrization with
     // 2^16-value band keys
