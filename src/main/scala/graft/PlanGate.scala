@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, BroadcastExchangeLike,
+  ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -28,7 +29,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  5. in the MOR read plan, every file scan under a BroadcastExchange must
   *     read ONLY delta files (broadcast-of-aggregate-over-base means the
   *     reconciliation working set is the whole table, not the delta
-  *     backlog).
+  *     backlog);
+  *  6. a MOR delta write with more than one Exchange or any
+  *     BroadcastExchange (its last-writer-wins dedup runs inside the bucket
+  *     shuffle's partitions: one scan, one shuffle).
   *
   * Plans are inspected AFTER execution so AQE's final plan (isFinalPlan)
   * is what's audited, not the pre-runtime guess.
@@ -108,31 +112,40 @@ object PlanGate {
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     })
     /** Audit the final plans of the `n` data writes under `tableDir`
-      * (listener events arrive asynchronously, in order). */
-    def auditWrites(ctx: String, tableDir: String, n: Int): Unit = {
+      * (listener events arrive asynchronously, in order); returns them with
+      * their output paths. */
+    def auditWrites(ctx: String, tableDir: String, n: Int): Seq[(String, SparkPlan)] = {
       import scala.jdk.CollectionConverters._
-      def plans = writes.asScala.toSeq.filter(_._1.contains(tableDir)).map(_._2)
+      def captured = writes.asScala.toSeq.filter(_._1.contains(tableDir))
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (plans.size < n && System.nanoTime() < deadline) Thread.sleep(50)
-      check(ctx, plans.size == n, s"captured the $n data writes of the commits")
-      val nodes = plans.flatMap(walk)
+      while (captured.size < n && System.nanoTime() < deadline) Thread.sleep(50)
+      check(ctx, captured.size == n, s"captured the $n data writes of the commits")
+      val nodes = captured.map(_._2).flatMap(walk)
       check(ctx, !nodes.exists(_.nodeName.contains("CartesianProduct")),
         "no cartesian product")
       check(ctx, !nodes.exists(_.nodeName.contains("SortAggregate")),
         "hash aggregation only (no var-width SortAggregate)")
       check(ctx, !nodes.exists(_.isInstanceOf[WindowExec]),
         "no window in the dedup path")
+      captured
     }
 
     import org.apache.spark.sql.functions._
-    val events = cdc.EventGen.events(spark,
-      cdc.EventGen.Config(nEvents = 20000, nUrls = 2000, parallelism = 4)).toDF
-    val late = events.limit(80).withColumn("lsn", col("lsn") + 1000000L)
     val tmp = java.nio.file.Files.createTempDirectory("plangate").toString
+    // the batches are WAL-style parquet segments, so a commit's plan starts
+    // at a file scan, as the ingest's do
+    def segment(name: String, df: DataFrame): DataFrame = {
+      df.write.parquet(s"$tmp/wal/$name")
+      spark.read.schema(cdc.Engine.eventSchema).parquet(s"$tmp/wal/$name")
+    }
+    val generated = cdc.EventGen.events(spark,
+      cdc.EventGen.Config(nEvents = 10000, nUrls = 2000, parallelism = 4)).toDF
+    val events = segment("events", generated)
+    val late = segment("late", generated.limit(80).withColumn("lsn", col("lsn") + 1000000L))
 
     // copy-on-write: a first commit, then one that joins against its state
     val cow = cdc.Engine.createPagesTable(s"$tmp/cow", 4)
-    cdc.MergeApply(spark, cow, events.limit(10000), 0L, stepId = "gate",
+    cdc.MergeApply(spark, cow, events, 0L, stepId = "gate",
       mode = cdc.MergeApply.CopyOnWrite)
     cdc.MergeApply(spark, cow, late, 1L, stepId = "gate", mode = cdc.MergeApply.CopyOnWrite)
     auditWrites("merge-apply-cow", s"$tmp/cow/", 2)
@@ -140,10 +153,25 @@ object PlanGate {
     // ---- merge-on-read: two delta commits around a compaction, whose
     // reconciling read is audited below ------------------------------------
     val t = cdc.Engine.createPagesTable(s"$tmp/mor", 4)
-    cdc.MergeApply(spark, t, events.limit(10000), 0L, stepId = "gate")
+    cdc.MergeApply(spark, t, events, 0L, stepId = "gate")
     cdc.MergeApply.compact(spark, t)
     cdc.MergeApply(spark, t, late, 1L, stepId = "gate")
-    auditWrites("merge-apply", s"$tmp/mor/", 3)
+    val morWrites = auditWrites("merge-apply", s"$tmp/mor/", 3)
+    // each delta commit dedups inside the bucket write: one scan, one
+    // shuffle (the bucket exchange), no broadcast
+    def norm(s: String): String = s.stripPrefix("file:").dropWhile(_ == '/')
+    val deltaDirs = t.metadata.snapshots.flatMap(t.filesOf).filter(_.kind == "delta")
+      .map(f => norm(t.absolute(f.path)).split("/_bucket=")(0)).toSet
+    val deltaWrites = morWrites.filter { case (path, _) => deltaDirs.contains(norm(path)) }
+    check("merge-apply", deltaWrites.size == 2, "captured the 2 delta writes")
+    for ((path, plan) <- deltaWrites) {
+      val nodes = walk(plan)
+      val snap = path.substring(path.lastIndexOf('/') + 1)
+      check("merge-apply", nodes.count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+        s"$snap delta write has exactly one exchange")
+      check("merge-apply", !nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
+        s"$snap delta write has no broadcast exchange")
+    }
 
     // ---- MOR read reconciliation plan -------------------------------------
     val morDf = t.read(spark)
@@ -157,7 +185,6 @@ object PlanGate {
     // join (i.e. pruned to delta keys before anything aggregates it) — an
     // UNPRUNED base scan under a broadcast means the reconciliation working
     // set is the whole table, not the delta backlog
-    def norm(s: String): String = s.stripPrefix("file:").dropWhile(_ == '/')
     val deltaFiles = t.metadata.snapshots.flatMap(t.filesOf)
       .filter(_.kind == "delta").map(f => norm(t.absolute(f.path))).toSet
     def unprunedBaseScans(p: SparkPlan, pruned: Boolean): Seq[String] = p match {

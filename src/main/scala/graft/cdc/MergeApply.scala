@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.lake._
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The merge-apply stage (north_rule core): apply one micro-batch of change
@@ -31,16 +31,18 @@ import org.apache.spark.sql.functions._
   *    low-rate/reference tables.
   *
   * Scale design (local[32] here, 1000 executors in production):
-  *  - one dedup shape per mode, both `groupBy(key).agg(max(lsn))` + a
-  *    broadcast semi join back, never a window: declarative aggregation
-  *    gets map-side partial aggregation, so a hot url collapses to ≤1 row
-  *    per input partition before the shuffle — skew bounded by
-  *    construction. MOR joins on one xxhash64(key, lsn) column (a
-  *    collision admits an extra lower-LSN delta row, which reads and
-  *    compaction reconcile away); CoW joins exactly on (key, lsn). A
-  *    two-stage salted max, engaged automatically by the previous batch's
-  *    duplication ratio, covers pathological single-key floods per the
-  *    north_star.
+  *  - exact last-writer-wins dedup in both modes, never a window. MOR: the
+  *    delta write sorts each bucket partition by (key, lsn desc) and keeps
+  *    the first row per key (`LakeTable.write`) — the batch is scanned once
+  *    and shuffled once, losing rows included, in 2 jobs. CoW: a slim
+  *    `groupBy(key).agg(max(lsn))` (map-side partial aggregation: a hot url
+  *    collapses to ≤1 row per input partition before the shuffle) collected
+  *    once, then a broadcast semi join back on (key, lsn).
+  *  - skew: the in-partition dedup sends every row of a key to one task,
+  *    so a flooded key is one long task. The previous batch's duplication
+  *    ratio (≥ 8) switches MOR to the CoW shape — a two-stage salted max
+  *    and the broadcast semi join drop the losers before any payload
+  *    shuffles (the flood A/B is in CHANGES.md) — and salts CoW's max.
   *  - copy-on-write touches only buckets present in the batch (manifest
   *    file pruning); untouched files carry forward without IO.
   *  - stats ride the write via `Observation` — no second pass.
@@ -75,11 +77,10 @@ object MergeApply {
   /** Auto-salt memo: per table dir, the last batch's observed duplication
     * ratio (events / approx distinct keys). A stream's key profile is
     * sticky, so the PREVIOUS batch's observation decides the NEXT batch's
-    * plan — zero extra jobs on the hot path. Note the broadcast dedup shape
-    * already bounds hot keys structurally (hash-agg partial aggregation
-    * collapses a flooded key to ≤1 slim row per input partition before any
-    * shuffle); salting is the second-stage defense the north_star calls
-    * for, engaged when duplication says it can pay. */
+    * plan — zero extra jobs on the hot path. At ≥ 8 events per key most
+    * payloads are losers: MOR then drops them before the write's shuffle
+    * instead of inside its partitions, and both modes salt the max-LSN
+    * aggregate against a single flooded key. */
   private val dupRatio = new java.util.concurrent.ConcurrentHashMap[String, Double]()
   private[graft] def lastDupRatio(tableDir: String): Option[Double] =
     Option(dupRatio.get(tableDir))
@@ -109,22 +110,10 @@ object MergeApply {
     else
       batch.groupBy(col(key)).agg(max(col("lsn")).as("lsn"))
 
-  /** Width of the MOR winner hash: `None` is the full 64-bit xxhash64. */
-  @volatile private var winnerHashBits: Option[Int] = None
-
-  /** Test hook: run `body` with the MOR winner hash narrowed to `bits`
-    * bits, so specs can force real collisions and prove the documented
-    * feed contract (reads/compaction reconcile; LWW feed consumers
-    * converge). */
-  private[graft] def withWinnerHashBits[T](bits: Int)(body: => T): T = {
-    require(bits >= 1 && bits <= 62, s"winner hash bits must be in 1..62, got $bits")
-    winnerHashBits = Some(bits)
-    try body finally winnerHashBits = None
-  }
-
   /** Apply `batch` (schema: lsn long, op string, <key>, value columns of the
     * table's current schema) to `table`. Returns stats; a batchId already in
-    * the snapshot log is skipped (exactly-once). */
+    * the snapshot log is skipped (exactly-once). `current` is the table's
+    * metadata when the caller has just read it (the DAG's plan does). */
   def apply(
       spark: SparkSession,
       table: LakeTable,
@@ -135,9 +124,10 @@ object MergeApply {
       // DAG lineage carried into the committed snapshot (incremental steps
       // record the upstream snapshot they consumed + their input checksum)
       inputSnapshots: Map[String, Long] = Map.empty,
-      inputChecksum: Option[String] = None
+      inputChecksum: Option[String] = None,
+      current: Option[TableMetadata] = None
   ): MergeStats = {
-    val meta = table.metadata
+    val meta = current.getOrElse(table.metadata)
     // exactly-once: idempotent-writer ledger keyed on (stepId, batchId) —
     // streaming batchIds restart at 0 after a checkpoint reset and two
     // streams share a table, so batchId alone is not a safe dedup key
@@ -164,34 +154,16 @@ object MergeApply {
     mode match {
       case MergeOnRead =>
         // ---- append-only delta commit: cost ∝ batch size ------------------
-        // LWW dedup = slim max-LSN aggregate + a broadcast semi join on ONE
-        // xxhash64(key, lsn) column: only WINNING payloads shuffle (to the
-        // bucket write), and the driver-built broadcast is 8 B/key instead
-        // of the full url string — the broadcast build was the measured
-        // Amdahl fraction of the compute path at 32 cores. Round-5 A/Bs at
-        // 2M events/local[32]: hashed 279.1k/287.0k vs an exact (key, lsn)
-        // broadcast join 275.0k/258.5k ev/s; the broadcast shape beat a
-        // map-side reduce-by-key, which shuffles every survivor's payload,
-        // 216k vs 121k ev/s on 20-events/url batches.
-        //
-        // A hash collision (p ≈ keys·rows/2^64 per batch) admits a
-        // lower-LSN EXTRA row into the delta. MOR table READS and
-        // compaction reconcile by max-LSN per key, so the collided row
-        // always loses there; `changesBetween` emits raw delta rows, so a
-        // feed consumer can see a key twice within one commit's slice at
-        // that probability (the documented probabilistic feed contract —
-        // see LakeTable.changesBetween). The CoW path writes base files
-        // that are read UNRECONCILED — it keeps the exact (key, lsn) join.
-        def wh: Column = {
-          val h = xxhash64(col(key), col("lsn"))
-          winnerHashBits.fold(h)(bits => pmod(h, lit(1L << bits)))
-        }
-        val maxH = maxLsnOf(observedBatch, key, salted)
-          .select(wh.as("__wh"))
-        val written = table.write(spark, meta, observedBatch
-          .withColumn("__wh", wh)
-          .join(broadcast(maxH), Seq("__wh"), "left_semi")
-          .select(
+        // the batch goes to the delta write, whose bucket partitions keep
+        // the max-LSN row per key: one scan, one shuffle, no broadcast. A
+        // flooded key lands on one task there, so under the salt memo the
+        // losers are dropped first by the exact (key, lsn) broadcast semi
+        // join (flood A/B in CHANGES.md)
+        val rows =
+          if (salted) observedBatch.join(broadcast(maxLsnOf(observedBatch, key, salted)),
+            Seq(key, "lsn"), "left_semi")
+          else observedBatch
+        val written = table.write(spark, meta, rows.select(
             (col(key) +: valueCols.map(col)) ++ Seq(
               col("lsn").as("_lsn"),
               (col("op") === "D").as("_deleted")): _*),
@@ -208,26 +180,23 @@ object MergeApply {
 
       case CopyOnWrite =>
         // ---- join + rewrite touched buckets -------------------------------
-        // exact LWW dedup (base files are read unreconciled, so no hash
-        // shortcut): slim max-LSN side broadcast — micro-batches are
-        // bounded, so it is bounded by batch key-cardinality × ~60B and the
-        // payload side never shuffles (measured: shuffled semi joins
-        // anti-scale under local-mode shuffle contention) — then a semi join
-        // back on (key, lsn) fetches the winning payloads, __s_-prefixed
-        // for the full-outer join against current state
-        val source = observedBatch
-          .join(broadcast(maxLsnOf(observedBatch, key, salted)),
-            Seq(key, "lsn"), "left_semi")
+        // exact LWW dedup: the slim (key, max-LSN, bucket) winners are
+        // collected once — bounded by batch key-cardinality × ~60 B — and
+        // give both the touched buckets and the broadcast side of a semi
+        // join back on (key, lsn) that fetches the winning payloads,
+        // __s_-prefixed for the full-outer join against current state. The
+        // payload side never shuffles before that join (measured: shuffled
+        // semi joins anti-scale under local-mode shuffle contention).
+        val slim = maxLsnOf(observedBatch, key, salted)
+          .withColumn("__bkt", LakeTable.bucketOf(col(key), meta.numBuckets))
+        val winners = slim.collect()
+        val touched: Set[Int] = winners.map(_.getInt(2)).toSet
+        val source = batch
+          .join(broadcast(spark.createDataFrame(java.util.Arrays.asList(winners: _*),
+            slim.schema).select(key, "lsn")), Seq(key, "lsn"), "left_semi")
           .select(
             (col(key) +: col("lsn").as("__s_lsn") +: col("op").as("__s_op") +:
               valueCols.map(c => col(c).as(s"__s_$c"))): _*)
-        // touched buckets from the RAW batch's key column (same key set as
-        // the deduped source): a narrow column-pruned scan + partial-agg'd
-        // distinct of ≤numBuckets values — NOT the dedup agg+join plan,
-        // which would run the whole dedup twice just to learn the buckets
-        val touched: Set[Int] = batch
-          .select(LakeTable.bucketOf(col(key), meta.numBuckets).as("bkt"))
-          .distinct().collect().map(_.getInt(0)).toSet
 
         val target = table.read(spark, Some(touched), includeTombstones = true)
         // full-outer by key: SHUFFLED HASH, not sort-merge (guide §3.1) —

@@ -246,8 +246,8 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
     if (s.run == null) Clean
     else {
       val meta = metadataOf(s.id)
-      val ids = s.deps.map(d =>
-        d -> metadataOf(d).flatMap(_.currentSnapshotId).getOrElse(-1L)).toMap
+      val deps = s.deps.map(d => d -> metadataOf(d)).toMap
+      val ids = deps.map { case (d, m) => d -> m.flatMap(_.currentSnapshotId).getOrElse(-1L) }
       meta.flatMap(m => m.currentSnapshot.map(m -> _)) match {
         case Some((m, snap)) if !force && snap.inputChecksum.isDefined =>
           val stored = snap.inputChecksum.get
@@ -256,7 +256,7 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
           if (stored == checksumFrom(s, ids)) Clean
           else if (stored.startsWith(dataChecksumFrom(s, ids) + ":")) Instant(m, ids)
           else if (s.incremental.isDefined && stored == checksumFrom(s, ids ++ from))
-            Incremental(m, from, ids)
+            Incremental(m, from, ids, deps.collect { case (d, Some(dm)) => d -> dm })
           else Full(meta, ids)
         case _ => Full(meta, ids)
       }
@@ -348,18 +348,19 @@ class StepDag(steps: Seq[Step], storeDir: String, numBuckets: Int = 8,
       t.commitSnapshot(meta, s.id, batchId = t.nextSnapshotId(meta),
         t.filesOf(meta.currentSnapshot.get), // carried forward — no data rewrite
         inputSnapshots = ids, inputChecksum = Some(checksumFrom(s, ids)))
-    case Incremental(meta, from, ids) =>
+    case Incremental(meta, from, ids, deps) =>
       val inc = s.incremental.get
       try {
         val feeds = inc.changeDeps.map(d =>
-          d -> table(d).changesBetween(spark, from(d), ids(d))).toMap
+          d -> table(d).changesBetween(spark, from(d), ids(d), deps(d))).toMap
         val others = s.deps.filterNot(inc.changeDeps.contains)
           .map(d => d -> readInput(spark, d)).toMap
         graft.cdc.MergeApply(spark, table(s.id), inc.mapChanges(spark, feeds, others),
           // sum of consumed change-dep snapshot ids: strictly increasing
           // whenever any feed moved — a monotone batchId for the ledger
           batchId = inc.changeDeps.map(ids).sum, stepId = s"step:${s.id}",
-          inputSnapshots = ids, inputChecksum = Some(checksumFrom(s, ids)))
+          inputSnapshots = ids, inputChecksum = Some(checksumFrom(s, ids)),
+          current = Some(meta))
       } catch {
         case NonFatal(e) =>
           System.err.println(
@@ -502,7 +503,8 @@ object StepDag {
     * runs: they drive the feed windows and are the lineage the commit
     * records, so a dep committing mid-build is the next run's work, never
     * silently stamped consumed. `meta` is the output table as planned
-    * (None before its first build). */
+    * (None before its first build); an incremental plan also carries the
+    * deps' metadata, so the feeds and the merge read no table again. */
   private sealed trait Plan
   private case object Clean extends Plan
   private final case class Full(meta: Option[TableMetadata], ids: Map[String, Long])
@@ -510,5 +512,5 @@ object StepDag {
   private final case class Instant(meta: TableMetadata, ids: Map[String, Long])
       extends Plan
   private final case class Incremental(meta: TableMetadata, from: Map[String, Long],
-      ids: Map[String, Long]) extends Plan
+      ids: Map[String, Long], deps: Map[String, TableMetadata]) extends Plan
 }

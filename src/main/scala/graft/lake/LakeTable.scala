@@ -390,33 +390,30 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     * read): the primitive that lets DOWNSTREAM steps recompute
     * incrementally (consume only changed keys) instead of the reference's
     * re-run-the-whole-step model. Each row carries `_op` ('U' upsert / 'D'
-    * delete when the table has a tombstone column) and `_snapshot_id`; a
-    * key changed in k commits of the window appears k times, LSN-ordered
-    * within each commit's slice.
+    * delete when the table has a tombstone column) and `_snapshot_id`.
     *
-    * PROBABILISTIC FEED CONTRACT: the MOR writer dedups each batch through
-    * a semi join on xxhash64(key, lsn) (MergeApply), so an in-batch hash
-    * collision (p ≈ keys·rows / 2^64 per batch) can land one EXTRA
-    * lower-LSN row for a key inside a single commit's slice. The feed
-    * emits raw delta rows and does not reconcile them — consumers that
-    * reduce per key by max LSN (the documented events → MergeApply LWW
-    * shape) converge identically; a consumer doing plain arithmetic
-    * aggregation over the feed would double-count at that probability.
-    * CdcSpec proves the contract at a forced-collision worst case.
+    * The feed is exact: it holds one row per (key, commit that changed the
+    * key) — the commit's max-LSN event for that key, since a delta write
+    * keeps one row per key ([[write]]). A key changed in k commits of the
+    * window appears k times, so both a per-key max-LSN reduction and plain
+    * aggregation over the feed are sound.
     *
     * Cost is O(changes): only each commit's ADDED delta files are read —
-    * never the base table. Compaction snapshots (batchId < 0) rewrite
-    * physically but change nothing logically and are skipped; copy-on-write
-    * commits rewrite whole buckets (their added files mix changed and
-    * carried rows) and are rejected loudly — run the table in MOR mode for
-    * change-feed consumers. */
+    * never the base table. A snapshot's added files are the ones under its
+    * own `data/snap-<id>/` dir (every write lands there; carried files keep
+    * the dir of the snapshot that wrote them), so one manifest is read per
+    * window snapshot. Compaction snapshots (batchId < 0) rewrite physically
+    * but change nothing logically and are skipped; copy-on-write commits
+    * rewrite whole buckets (their added files mix changed and carried rows)
+    * and are rejected loudly — run the table in MOR mode for change-feed
+    * consumers. `m` is the table's metadata when the caller has just read
+    * it. */
   def changesBetween(
       spark: SparkSession,
       fromExclusive: Long,
-      toInclusive: Long
+      toInclusive: Long,
+      m: TableMetadata = metadata
   ): DataFrame = {
-    val m = metadata
-    val byId = m.snapshots.map(s => s.snapshotId -> s).toMap
     val window = m.snapshots
       .filter(s => s.snapshotId > fromExclusive && s.snapshotId <= toInclusive)
       .sortBy(_.snapshotId)
@@ -439,9 +436,7 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     val added: Seq[DataFile] = window.flatMap { s =>
       if (s.batchId < 0) Nil // compaction: physical rewrite, no logical change
       else {
-        val parentPaths = s.parentId.flatMap(byId.get)
-          .map(p => filesOf(p).map(_.path).toSet).getOrElse(Set.empty[String])
-        val files = filesOf(s).filterNot(f => parentPaths.contains(f.path))
+        val files = filesOf(s).filter(_.path.startsWith(s"data/snap-${s.snapshotId}/"))
         require(files.forall(_.kind == "delta"),
           s"snapshot ${s.snapshotId} is a copy-on-write commit — the change " +
             "feed requires merge-on-read commits (added files must be deltas)")
@@ -500,29 +495,46 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
   /** Write `rows` (current-schema columns) as the `kind` (base|delta) data
     * files of the next snapshot on top of `meta`: bucketed by the key, one
     * zstd parquet file per non-empty bucket under `data/snap-<id>`, rows
-    * key-sorted within each file (read locality and compression; r6:
-    * skipping the sort did not win). Overwrite mode clobbers debris of a
-    * crashed attempt at the same snapshot id, so a retry self-heals.
+    * key-sorted within each file. The sort is by `(_bucket, key)`, so the
+    * write's own required ordering (`_bucket`, for `partitionBy`) is its
+    * prefix and the plan keeps this one sort; a sort by the key alone was
+    * dropped under the planned write's `Sort [_bucket]`. Overwrite mode
+    * clobbers debris of a crashed attempt at the same snapshot id, so a
+    * retry self-heals.
+    *
+    * A delta write is the merge-on-read commit's last-writer-wins dedup:
+    * `rows` may hold several rows per key, and each partition is sorted by
+    * `(_bucket, key, <lww column> desc)` and keeps the first row of each key
+    * ([[KeepFirst]]). A partition holds every row of its buckets, so the row
+    * kept is exactly the max-LWW row per key — one scan of `rows`, one
+    * shuffle, no broadcast.
     *
     * Per-bucket row counts (and the tombstone count, when the table has a
     * tombstone column) ride the write as one `Observation` placed after the
-    * shuffle, in the result stage, where each task's update counts once —
-    * so the manifest's row counts come from the write itself and listing
-    * reads no parquet footer. Nothing is committed: pass the files to
-    * [[commitSnapshot]]. */
+    * shuffle and the dedup, in the result stage, where each task's update
+    * counts once — so the manifest's row counts come from the write itself
+    * and listing reads no parquet footer. Nothing is committed: pass the
+    * files to [[commitSnapshot]]. */
   def write(spark: SparkSession, meta: TableMetadata, rows: DataFrame,
       kind: String): Written = {
     val b = meta.numBuckets
-    val key = col(meta.bucketColumn)
+    val key = meta.bucketColumn
     val snapId = nextSnapshotId(meta)
     val snapDirRel = s"data/snap-$snapId"
     val counts = meta.tombstoneColumn.toSeq.map(ts =>
         sum(when(col(ts), 1L).otherwise(0L)).as("tombstones")) ++
       (0 until b).map(k => sum(when(col("_bucket") === k, 1L).otherwise(0L)).as(s"b$k"))
     val obs = Observation(s"write-$snapId")
-    repartitionByBucket(rows.withColumn("_bucket", bucketOf(key, b)), b)
+    val bucketed = repartitionByBucket(rows.withColumn("_bucket", bucketOf(col(key), b)), b)
+    val laidOut = kind match {
+      case "delta" =>
+        val lww = meta.lwwColumn.getOrElse(throw new IllegalArgumentException(
+          s"delta files need a last-writer-wins table; $dir has no lwwColumn"))
+        KeepFirst.keepFirstPerGroup(bucketed, Seq("_bucket", key), lww)
+      case _ => bucketed.sortWithinPartitions(col("_bucket"), col(key))
+    }
+    laidOut
       .observe(obs, counts.head, counts.tail: _*)
-      .sortWithinPartitions(key)
       .write.mode("overwrite")
       .option("compression", Codec)
       .option("maxRecordsPerFile", 0L) // one file per bucket, whatever the session sets

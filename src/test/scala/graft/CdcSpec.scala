@@ -133,64 +133,76 @@ class CdcSpec extends SparkSpec {
     assert(checksum(cow.read(spark)) == want)
   }
 
-  test("MOR hashed-broadcast dedup strategy converges to the same state") {
-    // the xxhash64(key,lsn) semi join: a collision can admit an extra
-    // lower-LSN delta row, which read/compaction reconcile must absorb —
-    // final state equality is exactly the contract
+  test("MOR in-partition dedup equals the golden state, before and after compaction") {
     val cfg = EventGen.Config(nEvents = 6000, nUrls = 400, seed = 78,
       deleteRatio = 0.1, parallelism = 4)
-    val walDir = tmpDir("wal-hashed")
+    val walDir = tmpDir("wal-inpart")
     val segs = EventGen.writeWalSegments(spark, cfg, walDir, 3)
     val events = spark.read.schema(Engine.eventSchema).parquet(walDir + "/*")
     val want = checksum(Engine.goldenFinalState(events))
-    val t = Engine.createPagesTable(tmpDir("lake-hashed") + "/pages", 4)
+    val t = Engine.createPagesTable(tmpDir("lake-inpart") + "/pages", 4)
     Engine.replaySegments(spark, segs, t, mode = MergeApply.MergeOnRead)
     assert(checksum(t.read(spark)) == want)
-    // compaction of hashed-written deltas reconciles to the same state too
     MergeApply.compact(spark, t)
     assert(checksum(t.read(spark)) == want)
   }
 
-  test("MOR hashed dedup under FORCED __wh collisions: reads, compaction and feed consumers converge") {
-    // narrow the winner hash to 3 bits (8 values for 400 urls × 3 segments):
-    // nearly every row's hash collides with a winner, so the semi join
-    // admits many lower-LSN extra rows into the deltas — the documented
-    // probabilistic contract at its worst. Reads and compaction must still
-    // reconcile to the golden state, and a LWW feed consumer (the
-    // documented shape) must converge; only exactly-k-times feed
-    // multiplicity is (documentedly) forfeit.
+  /** The feed over every commit of `t` is exact against the WAL segments
+    * `segs` applied as commits 1..n: one row per (url, commit whose segment
+    * holds the url), carrying that segment's max LSN for the url; and its
+    * max-LSN reduction equals the table state. */
+  def assertExactFeed(t: graft.lake.LakeTable, segs: Seq[DataFrame]): Unit = {
+    import org.apache.spark.sql.functions.{col, max, max_by, struct}
+    val feed = t.changesBetween(spark, 0L, t.metadata.currentSnapshotId.get)
+    val got = feed.select("url", "_snapshot_id", "_lsn")
+      .as[(String, Long, Long)].collect()
+    val want = segs.zipWithIndex.flatMap { case (seg, i) =>
+      seg.groupBy("url").agg(max("lsn")).as[(String, Long)].collect()
+        .map { case (url, lsn) => (url, i + 1L, lsn) }
+    }
+    assert(got.length == want.length) // no key twice within a commit
+    assert(got.toSet == want.toSet)
+    val reduced = feed.groupBy("url")
+      .agg(max_by(struct(col("_op"), col("text"), col("_lsn")), col("_lsn")).as("w"))
+      .filter(col("w._op") =!= "D")
+      .select(col("url"), col("w.text").as("text"))
+    val state = t.read(spark).select("url", "text")
+    assert(reduced.except(state).isEmpty && state.except(reduced).isEmpty)
+  }
+
+  test("MOR change feed is exact: one row per (key, commit); reduces to the table") {
     val cfg = EventGen.Config(nEvents = 6000, nUrls = 400, seed = 79,
       deleteRatio = 0.1, parallelism = 4)
-    val walDir = tmpDir("wal-hashcol")
+    val walDir = tmpDir("wal-exactfeed")
     val segs = EventGen.writeWalSegments(spark, cfg, walDir, 3)
     val events = spark.read.schema(Engine.eventSchema).parquet(walDir + "/*")
     val want = checksum(Engine.goldenFinalState(events))
-    MergeApply.withWinnerHashBits(3) {
-      val t = Engine.createPagesTable(tmpDir("lake-hashcol") + "/pages", 4)
-      Engine.replaySegments(spark, segs, t, mode = MergeApply.MergeOnRead)
-      assert(checksum(t.read(spark)) == want) // read-side max-LSN reconcile
-      // feed → LWW consumer convergence (collisions make the feed emit a
-      // key more than once within one commit's slice; LWW absorbs it)
-      import org.apache.spark.sql.functions.{col, max_by, struct}
-      val feed = t.changesBetween(spark, 0L,
-        t.metadata.currentSnapshotId.get)
-      val reduced = feed.groupBy("url")
-        .agg(max_by(struct(col("_op"), col("text"), col("_lsn")), col("_lsn")).as("w"))
-        .filter(col("w._op") =!= "D")
-        .select(col("url"), col("w.text").as("text"))
-      val state = t.read(spark).select("url", "text")
-      assert(reduced.except(state).isEmpty && state.except(reduced).isEmpty)
-      MergeApply.compact(spark, t)
-      assert(checksum(t.read(spark)) == want) // compaction reconcile
-    }
+    val t = Engine.createPagesTable(tmpDir("lake-exactfeed") + "/pages", 4)
+    Engine.replaySegments(spark, segs, t, mode = MergeApply.MergeOnRead)
+    assert(checksum(t.read(spark)) == want)
+    assertExactFeed(t, segs.map(spark.read.schema(Engine.eventSchema).parquet(_)))
+    MergeApply.compact(spark, t)
+    assert(checksum(t.read(spark)) == want)
   }
 
-  test("winner-hash hook rejects widths outside 1..62") {
-    // 63 bits gives a negative modulus; 64 wraps (1L << 64 == 1), collapsing
-    // every hash to 0; 0 leaves a single hash value
-    for (bits <- Seq(0, 63, 64))
-      intercept[IllegalArgumentException](MergeApply.withWinnerHashBits(bits)(()))
-    assert(MergeApply.withWinnerHashBits(62)(true))
+  test("key flood (95% on one url): MOR and CoW state golden, MOR feed exact") {
+    // the first batch runs the plain plan; its duplication ratio engages
+    // the salt memo, so the second runs the salted one
+    val n = 4000
+    val evs = (1 to n).map(i => ev(i.toLong, if (i % 13 == 0) "D" else "U",
+      if (i % 20 != 0) "hot" else s"u${i % 60}", s"t$i"))
+    val batches = evs.grouped(n / 2).map(_.toDS.toDF).toSeq
+    val golden = checksum(Engine.goldenFinalState(evs.toDS.toDF))
+    for (mode <- Seq(MergeApply.MergeOnRead, MergeApply.CopyOnWrite)) {
+      val dir = tmpDir(s"lake-flood-$mode") + "/pages"
+      val table = Engine.createPagesTable(dir, numBuckets = 4)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        MergeApply(spark, table, b, i.toLong, mode = mode)
+        assert(MergeApply.saltAutoEngaged(dir), s"mode=$mode")
+      }
+      assert(checksum(table.read(spark)) == golden, s"mode=$mode")
+      if (mode == MergeApply.MergeOnRead) assertExactFeed(table, batches)
+    }
   }
 
   test("property: any batch split of the same log converges to the golden state") {
@@ -380,9 +392,8 @@ class CdcSpec extends SparkSpec {
     def ev(lsn: Long, url: String) =
       graft.model.ChangeEvent(lsn, "U", url, ts, Array.emptyByteArray, s"t$lsn", "en")
     // 95% of each batch hits ONE url → duplication ratio ≈ 19 ≥ the auto
-    // threshold. (Structurally, the broadcast dedup's hash-agg partial
-    // aggregation already collapses the flood to ≤1 slim row per input
-    // partition; auto-salt is the explicit second-stage defense.)
+    // threshold: the next batch drops the flood's losers through the salted
+    // max-LSN aggregate and a broadcast semi join before the delta write
     val n = 2000
     val b1 = (1 to n).map(i => ev(i.toLong, if (i % 20 != 0) "hot" else s"u$i"))
     val b2 = (n + 1 to 2 * n).map(i => ev(i.toLong, if (i % 20 != 0) "hot" else s"u$i"))

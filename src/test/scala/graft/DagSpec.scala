@@ -125,6 +125,38 @@ class DagSpec extends SparkSpec {
     assert(r3.executed == Seq("derived/tokens") && fullRuns == 2)
   }
 
+  test("an incremental run reads each table's metadata once, in its plan") {
+    import graft.graph.IncrementalSpec
+    import graft.lake.LakeTable
+    val store = tmpDir("dag-reads")
+    def evd(lsn: Long, url: String) = graft.model.ChangeEvent(lsn, "U", url,
+      new java.sql.Timestamp(0), Array.emptyByteArray, "a b", "en")
+    val src = cdc.Engine.createPagesTable(s"$store/pages", 4)
+    cdc.MergeApply(spark, src, Seq(evd(1L, "u1")).toDS.toDF, 0L, stepId = "cdc_ingest")
+    var fullRuns = 0
+    val tokens = Step("derived/tokens", Seq("pages"), "v1",
+      run = (_, in) => { fullRuns += 1; in("pages").select(col("url"), col("_lsn")) },
+      incremental = Some(IncrementalSpec.one("pages") { (_, feed, _) =>
+        feed.select(col("_lsn").as("lsn"), col("_op").as("op"), col("url"))
+      }))
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val dag = new StepDag(Seq(Step.external("pages"), tokens), store) {
+      private val counted = new java.util.concurrent.ConcurrentHashMap[String, LakeTable]()
+      override def table(id: String): LakeTable = counted.computeIfAbsent(id, i =>
+        new LakeTable(tableDir(i)) {
+          override def metadata = { reads.incrementAndGet(); super.metadata }
+        })
+    }
+    dag.run(spark)
+    assert(fullRuns == 1)
+    cdc.MergeApply(spark, src, Seq(evd(2L, "u2")).toDS.toDF, 1L, stepId = "cdc_ingest")
+    reads.set(0)
+    assert(dag.run(spark).executed == Seq("derived/tokens"))
+    assert(fullRuns == 1) // the change feed was merged, not a full build
+    assert(reads.get == 2) // the plan's: the step's table and the dep's
+    assert(dag.table("derived/tokens").read(spark).count() == 2)
+  }
+
   test("force rebuilds an incremental step in full, every time") {
     import graft.graph.IncrementalSpec
     val store = tmpDir("dag-force")

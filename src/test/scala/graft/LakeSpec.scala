@@ -267,6 +267,34 @@ class LakeSpec extends SparkSpec {
     assert(!plan.contains("LeftAnti"), "delta-only read still plans the base anti join")
   }
 
+  test("every data file is key-sorted: MOR, CoW, compaction and full-build writes") {
+    import org.apache.spark.sql.functions.col
+    def evd(lsn: Long, url: String) = graft.model.ChangeEvent(
+      lsn, "U", url, new java.sql.Timestamp(0), Array.emptyByteArray, s"t$lsn", "en")
+    val batch = (1 to 2000).map(i => evd(i.toLong, s"u${i * 7919 % 500}")).toDS.toDF
+    val root = tmpDir("lake-sorted")
+    val mor = cdc.Engine.createPagesTable(s"$root/mor", 8)
+    cdc.MergeApply(spark, mor, batch, 0L)
+    val deltas = mor.filesOf(mor.metadata.currentSnapshot.get)
+    cdc.MergeApply.compact(spark, mor)
+    val cow = cdc.Engine.createPagesTable(s"$root/cow", 8)
+    cdc.MergeApply(spark, cow, batch, 0L, mode = cdc.MergeApply.CopyOnWrite)
+    val dag = new graft.graph.StepDag(Seq(graft.graph.Step("data/keys", Nil, "v1",
+      (s, _) => s.range(0, 2000).select(
+        (col("id") * 7919 % 1000).cast("string").as("k"), col("id").as("v")))),
+      s"$root/dag")
+    dag.run(spark)
+    def current(t: LakeTable) = t.filesOf(t.metadata.currentSnapshot.get).map(t -> _)
+    val files = deltas.map(mor -> _) ++ current(mor) ++ current(cow) ++
+      current(dag.table("data/keys"))
+    assert(deltas.forall(_.kind == "delta") && deltas.size == 8 && files.size == 32)
+    for ((t, f) <- files) {
+      val keys = spark.read.parquet(t.absolute(f.path))
+        .select(t.metadata.bucketColumn).as[String].collect().toSeq
+      assert(keys.nonEmpty && keys == keys.sorted, s"${t.dir}/${f.path}")
+    }
+  }
+
   test("changesBetween: O(changes) incremental feed; replay reduces to table state") {
     import org.apache.spark.sql.functions.{max_by, struct}
     val dir = tmpDir("lake-changes") + "/pages"

@@ -2,7 +2,8 @@
 # Per-round plan regression gate: compiles, runs graft.PlanGate over the most
 # expensive queries + the CDC merge/MOR-read plans, and records the output.
 # Fails (non-zero) on cartesian products, unpartitioned windows, var-width
-# SortAggregates in the merge path, or broadcast-of-base in the MOR read.
+# SortAggregates in the merge path, broadcast-of-base in the MOR read, or a
+# MOR delta write with more than one exchange or any broadcast.
 # Usage: tools/plan_gate.sh [sfDir] [outFile]
 set -euo pipefail
 cd "$(dirname "$0")/.."
