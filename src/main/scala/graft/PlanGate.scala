@@ -30,7 +30,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     read ONLY delta files (broadcast-of-aggregate-over-base means the
   *     reconciliation working set is the whole table, not the delta
   *     backlog);
-  *  6. a MOR delta write with more than one Exchange or any
+  *  6. a MOR delta or compaction write with more than one Exchange or any
   *     BroadcastExchange (its last-writer-wins dedup runs inside the bucket
   *     shuffle's partitions: one scan, one shuffle).
   *
@@ -150,27 +150,29 @@ object PlanGate {
     cdc.MergeApply(spark, cow, late, 1L, stepId = "gate", mode = cdc.MergeApply.CopyOnWrite)
     auditWrites("merge-apply-cow", s"$tmp/cow/", 2)
 
-    // ---- merge-on-read: two delta commits around a compaction, whose
-    // reconciling read is audited below ------------------------------------
+    // ---- merge-on-read: two delta commits around a compaction; the
+    // table's reconciling read is audited below -----------------------------
     val t = cdc.Engine.createPagesTable(s"$tmp/mor", 4)
     cdc.MergeApply(spark, t, events, 0L, stepId = "gate")
     cdc.MergeApply.compact(spark, t)
     cdc.MergeApply(spark, t, late, 1L, stepId = "gate")
     val morWrites = auditWrites("merge-apply", s"$tmp/mor/", 3)
-    // each delta commit dedups inside the bucket write: one scan, one
-    // shuffle (the bucket exchange), no broadcast
+    // each delta commit and the compaction dedup inside the bucket write:
+    // one scan, one shuffle (the bucket exchange), no broadcast
     def norm(s: String): String = s.stripPrefix("file:").dropWhile(_ == '/')
-    val deltaDirs = t.metadata.snapshots.flatMap(t.filesOf).filter(_.kind == "delta")
-      .map(f => norm(t.absolute(f.path)).split("/_bucket=")(0)).toSet
-    val deltaWrites = morWrites.filter { case (path, _) => deltaDirs.contains(norm(path)) }
-    check("merge-apply", deltaWrites.size == 2, "captured the 2 delta writes")
-    for ((path, plan) <- deltaWrites) {
+    val kindOf = t.metadata.snapshots.flatMap(t.filesOf)
+      .map(f => norm(t.absolute(f.path)).split("/_bucket=")(0) -> f.kind).toMap
+    check("merge-apply", morWrites.map(w => kindOf.get(norm(w._1))) ==
+      Seq(Some("delta"), Some("base"), Some("delta")),
+      "captured the delta, compaction and delta writes")
+    for ((path, plan) <- morWrites) {
       val nodes = walk(plan)
       val snap = path.substring(path.lastIndexOf('/') + 1)
+      val what = if (kindOf.get(norm(path)).contains("base")) "compaction" else "delta"
       check("merge-apply", nodes.count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
-        s"$snap delta write has exactly one exchange")
+        s"$snap $what write has exactly one exchange")
       check("merge-apply", !nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
-        s"$snap delta write has no broadcast exchange")
+        s"$snap $what write has no broadcast exchange")
     }
 
     // ---- MOR read reconciliation plan -------------------------------------

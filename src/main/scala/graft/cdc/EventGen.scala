@@ -14,8 +14,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    the content-addressing property the reference gets from md5-pinned
   *    snapshots;
   *  - hot-key skew: domains are drawn from a power-law, so a few domains
-  *    (and urls) absorb a large share of events — exercises the salted /
-  *    partial-agg dedup path;
+  *    (and urls) absorb a large share of events — exercises the
+  *    map-side partial aggregation of the max-LSN dedup;
   *  - late arrivals: a fraction of events carry a warc_ts earlier than their
   *    LSN order (LWW is LSN-based, so correctness is unaffected);
   *  - the html/text pair is built so that `extractText(html) == text`

@@ -24,11 +24,11 @@ import org.apache.spark.sql.functions._
   *  - **MergeOnRead (default ingest path)**: the deduped batch is appended
   *    as delta files, bucket-partitioned; no read of existing data. Batch
   *    cost ∝ batch size — sustained throughput is flat in table size, which
-  *    is what 10^10-event ingest needs. Reads reconcile (max_by LSN per
-  *    key); `compact()` folds deltas into base files periodically.
+  *    is what 10^10-event ingest needs. Reads reconcile (max LSN per key);
+  *    `compact()` folds deltas into base files periodically, through the
+  *    same keep-first bucket write (`LakeTable.compact`).
   *  - **CopyOnWrite**: join against current state and rewrite touched
-  *    buckets — read-optimized, used by compaction itself and for
-  *    low-rate/reference tables.
+  *    buckets — read-optimized, for low-rate/reference tables.
   *
   * Scale design (local[32] here, 1000 executors in production):
   *  - exact last-writer-wins dedup in both modes, never a window. MOR: the
@@ -39,10 +39,10 @@ import org.apache.spark.sql.functions._
   *    collapses to ≤1 row per input partition before the shuffle) collected
   *    once, then a broadcast semi join back on (key, lsn).
   *  - skew: the in-partition dedup sends every row of a key to one task,
-  *    so a flooded key is one long task. The previous batch's duplication
-  *    ratio (≥ 8) switches MOR to the CoW shape — a two-stage salted max
-  *    and the broadcast semi join drop the losers before any payload
-  *    shuffles (the flood A/B is in CHANGES.md) — and salts CoW's max.
+  *    so a flooded key is one long task. When the previous MOR commit wrote
+  *    ≤ 1 key per 8 events, the next one first drops the losers through
+  *    the CoW shape — the slim max-LSN aggregate and the broadcast semi
+  *    join — before any payload shuffles (the flood A/B is in CHANGES.md).
   *  - copy-on-write touches only buckets present in the batch (manifest
   *    file pruning); untouched files carry forward without IO.
   *  - stats ride the write via `Observation` — no second pass.
@@ -74,41 +74,28 @@ object MergeApply {
     case _             => 0L
   }
 
-  /** Auto-salt memo: per table dir, the last batch's observed duplication
-    * ratio (events / approx distinct keys). A stream's key profile is
-    * sticky, so the PREVIOUS batch's observation decides the NEXT batch's
-    * plan — zero extra jobs on the hot path. At ≥ 8 events per key most
-    * payloads are losers: MOR then drops them before the write's shuffle
-    * instead of inside its partitions, and both modes salt the max-LSN
-    * aggregate against a single flooded key. */
-  private val dupRatio = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-  private[graft] def lastDupRatio(tableDir: String): Option[Double] =
-    Option(dupRatio.get(tableDir))
-  private[graft] def saltAutoEngaged(tableDir: String): Boolean =
-    lastDupRatio(tableDir).exists(_ >= 8.0)
-
-  private def recordDupRatio(tableDir: String, srcRow: Map[String, Any]): Unit = {
-    val events = g(srcRow, "events"); val keys = g(srcRow, "keys")
-    if (keys > 0) dupRatio.put(tableDir, events.toDouble / keys)
-  }
+  /** Flood pre-drop memo: per table dir, the last MOR commit's events per
+    * written key — exact, since its delta write holds one row per key. A
+    * stream's key profile is sticky, so the PREVIOUS commit's ratio picks
+    * the NEXT commit's plan, with no extra job. At ≥ 8 events per key most
+    * payloads are losers, and the next commit drops them before the write's
+    * shuffle instead of inside its partitions. */
+  private val eventsPerKey = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+  private[graft] def floodPreDropRatio(tableDir: String): Option[Double] =
+    Option(eventsPerKey.get(tableDir))
+  private[graft] def floodPreDrop(tableDir: String): Boolean =
+    floodPreDropRatio(tableDir).exists(_ >= 8.0)
 
   /** Slim (key, max-LSN) winners of a batch: a fixed-width
     * `groupBy(key).agg(max(lsn))` (whole-stage-codegen HashAggregate with
     * map-side partial aggregation — a hot key collapses to ≤1 slim row per
-    * input partition). `salted` adds a two-stage reduction over 16 salt
-    * buckets for pathological single-key floods. This deliberately
-    * avoids `max_by(struct(...))`, whose variable-width aggregation buffer
-    * forces SortAggregate (two extra sorts of full payloads). A semi join
-    * back on (key, lsn) then picks exactly the winners because LSNs are
-    * unique within a batch (the WAL contract). */
-  private def maxLsnOf(batch: DataFrame, key: String, salted: Boolean): DataFrame =
-    if (salted)
-      batch
-        .groupBy(col(key), pmod(xxhash64(col("lsn")), lit(16)).as("__salt"))
-        .agg(max(col("lsn")).as("lsn"))
-        .groupBy(col(key)).agg(max(col("lsn")).as("lsn"))
-    else
-      batch.groupBy(col(key)).agg(max(col("lsn")).as("lsn"))
+    * input partition before the shuffle). This deliberately avoids
+    * `max_by(struct(...))`, whose variable-width aggregation buffer forces
+    * SortAggregate (two extra sorts of full payloads). A semi join back on
+    * (key, lsn) then picks exactly the winners because LSNs are unique
+    * within a batch (the WAL contract). */
+  private def maxLsnOf(batch: DataFrame, key: String): DataFrame =
+    batch.groupBy(col(key)).agg(max(col("lsn")).as("lsn"))
 
   /** Apply `batch` (schema: lsn long, op string, <key>, value columns of the
     * table's current schema) to `table`. Returns stats; a batchId already in
@@ -145,23 +132,20 @@ object MergeApply {
       obsSrc,
       min(col("lsn")).as("lsnMin"),
       max(col("lsn")).as("lsnMax"),
-      count(lit(1)).as("events"),
-      // duplication ratio feeds the auto-salt memo for the NEXT batch
-      approx_count_distinct(col(key)).as("keys"))
-    // auto-salt: the previous batch's duplication memo picks this batch's plan
-    val salted = saltAutoEngaged(table.dir)
+      count(lit(1)).as("events"))
 
     mode match {
       case MergeOnRead =>
         // ---- append-only delta commit: cost ∝ batch size ------------------
         // the batch goes to the delta write, whose bucket partitions keep
         // the max-LSN row per key: one scan, one shuffle, no broadcast. A
-        // flooded key lands on one task there, so under the salt memo the
-        // losers are dropped first by the exact (key, lsn) broadcast semi
-        // join (flood A/B in CHANGES.md)
+        // flooded key lands on one task there, so under the pre-drop memo
+        // the losers are dropped first by the exact (key, lsn) broadcast
+        // semi join (flood A/B in CHANGES.md)
         val rows =
-          if (salted) observedBatch.join(broadcast(maxLsnOf(observedBatch, key, salted)),
-            Seq(key, "lsn"), "left_semi")
+          if (floodPreDrop(table.dir))
+            observedBatch.join(broadcast(maxLsnOf(observedBatch, key)),
+              Seq(key, "lsn"), "left_semi")
           else observedBatch
         val written = table.write(spark, meta, rows.select(
             (col(key) +: valueCols.map(col)) ++ Seq(
@@ -169,7 +153,8 @@ object MergeApply {
               (col("op") === "D").as("_deleted")): _*),
           kind = "delta")
         val srcRow = obsSrc.get
-        recordDupRatio(table.dir, srcRow)
+        if (written.rows > 0)
+          eventsPerKey.put(table.dir, g(srcRow, "events").toDouble / written.rows)
         val snap = table.commitSnapshot(meta, stepId, batchId,
           meta.currentSnapshot.map(table.filesOf).getOrElse(Nil) ++ written.files,
           ledger = true, lsnMin = g(srcRow, "lsnMin"), lsnMax = g(srcRow, "lsnMax"),
@@ -187,7 +172,7 @@ object MergeApply {
         // __s_-prefixed for the full-outer join against current state. The
         // payload side never shuffles before that join (measured: shuffled
         // semi joins anti-scale under local-mode shuffle contention).
-        val slim = maxLsnOf(observedBatch, key, salted)
+        val slim = maxLsnOf(observedBatch, key)
           .withColumn("__bkt", LakeTable.bucketOf(col(key), meta.numBuckets))
         val winners = slim.collect()
         val touched: Set[Int] = winners.map(_.getInt(2)).toSet
@@ -237,7 +222,6 @@ object MergeApply {
 
         val written = table.write(spark, meta, classified.select(outCols: _*), kind = "base")
         val srcRow = obsSrc.get; val mergeRow = obsMerge.get
-        recordDupRatio(table.dir, srcRow)
         val carried = meta.currentSnapshot
           .map(s => table.filesOf(s).filterNot(f => touched.contains(f.bucket)))
           .getOrElse(Nil)
@@ -252,30 +236,15 @@ object MergeApply {
     }
   }
 
-  /** Fold all delta files into base files: one LWW reconciliation + rewrite
-    * of buckets that have deltas. Run periodically (every K batches) so read
-    * amplification stays bounded; batchId = -snapshotId marks compactions in
-    * the lineage (they apply no new events).
-    *
-    * Tombstones are RETAINED in base by default (reads filter them): purging
-    * is only safe once no event below the tombstone's LSN can still arrive —
-    * pass `purgeTombstones = true` when the source guarantees LSN-contiguous
-    * delivery up to the low watermark (a binlog tail does). */
+  /** Fold the delta files into base files ([[LakeTable.compact]]): one
+    * keep-first rewrite of the buckets that hold deltas, committed as a
+    * compaction snapshot. Returns its id, or None when there was no delta.
+    * `purgeTombstones` drops winning tombstones: pass it only when the
+    * source guarantees LSN-contiguous delivery up to the low watermark (a
+    * binlog tail does), since a later lower-LSN event would otherwise come
+    * back to life. */
   def compact(spark: SparkSession, table: LakeTable,
       stepId: String = "compaction",
-      purgeTombstones: Boolean = false): Option[Long] = {
-    val meta = table.metadata
-    val snap = meta.currentSnapshot.getOrElse(return None)
-    val snapFiles = table.filesOf(snap)
-    val deltaBuckets = snapFiles.filter(_.kind == "delta").map(_.bucket).toSet
-    if (deltaBuckets.isEmpty) return None
-    // reconciled state of delta-bearing buckets, rewritten as base files
-    val written = table.write(spark, meta,
-      table.read(spark, Some(deltaBuckets), includeTombstones = !purgeTombstones),
-      kind = "base")
-    val snapId = table.nextSnapshotId(meta)
-    table.commitSnapshot(meta, stepId, batchId = -snapId,
-      snapFiles.filterNot(f => deltaBuckets.contains(f.bucket)) ++ written.files)
-    Some(snapId)
-  }
+      purgeTombstones: Boolean = false): Option[Long] =
+    table.compact(spark, stepId, purgeTombstones)
 }

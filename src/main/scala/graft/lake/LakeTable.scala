@@ -28,7 +28,10 @@ import scala.jdk.CollectionConverters._
   * committed by the overridable `commit` — merge-on-read deltas,
   * copy-on-write rewrites, compactions, DAG step outputs and INSTANT
   * re-stamps alike. Callers decide what rows to write and which files
-  * carry forward.
+  * carry forward. On a last-writer-wins table, base and delta files and
+  * how they fold stay private here: a delta write and `compact` keep the
+  * max-LWW row per key inside the bucket write, and `read` reconciles
+  * with one max-LWW aggregate.
   *
   * Design notes for 100 TB scale:
   *  - data is hash-bucketed by key (`LakeTable.bucketOf`) — merges prune to
@@ -322,7 +325,10 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     * broadcast working set is therefore bounded by the delta backlog
     * (compaction cadence), NOT table size — a full-table read of a 100 TB
     * table with a small delta backlog does two cheap hash joins per
-    * delta bucket, not a 10^9-key aggregate.
+    * delta bucket, not a 10^9-key aggregate. With no base file in those
+    * buckets the base side is an empty local relation, and Catalyst
+    * prunes the plan to one semi join of the deltas against their max-LSN
+    * aggregate.
     */
   def read(spark: SparkSession, buckets: Option[Set[Int]] = None,
       includeTombstones: Boolean = false,
@@ -355,27 +361,14 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
         // batchId dedup prevents re-applied batches writing duplicates.
         // The delta-key side is slim and bounded; AQE picks broadcast from
         // runtime stats, so no hint.
-        if (baseFiles.isEmpty) {
-          // delta-only fast path (fresh table / first compaction / pure
-          // delta buckets): with no base rows, "base rows of delta keys"
-          // is empty by construction, so the delta-key distinct and the
-          // semi/anti joins against the (empty) base scan are dead plan
-          // weight — reconcile the deltas directly by max-LSN per key.
-          // Halves the plan of a fresh-table read (the q_cdc_merge /
-          // q_change_feed shape) and trims first compactions.
-          val maxL = delta.groupBy(col(key)).agg(max(col(lww)).as(lww))
-          readRaw(spark, m, cleanFiles)
-            .unionByName(delta.join(maxL, Seq(key, lww), "left_semi"))
-        } else {
-          val deltaKeys = delta.select(col(key)).distinct()
-          val affected = base.join(deltaKeys, Seq(key), "left_semi")
-            .unionByName(delta)
-          val untouchedBase = base.join(deltaKeys, Seq(key), "left_anti")
-          val maxL = affected.groupBy(col(key)).agg(max(col(lww)).as(lww))
-          readRaw(spark, m, cleanFiles)
-            .unionByName(untouchedBase)
-            .unionByName(affected.join(maxL, Seq(key, lww), "left_semi"))
-        }
+        val deltaKeys = delta.select(col(key)).distinct()
+        val affected = base.join(deltaKeys, Seq(key), "left_semi")
+          .unionByName(delta)
+        val untouchedBase = base.join(deltaKeys, Seq(key), "left_anti")
+        val maxL = affected.groupBy(col(key)).agg(max(col(lww)).as(lww))
+        readRaw(spark, m, cleanFiles)
+          .unionByName(untouchedBase)
+          .unionByName(affected.join(maxL, Seq(key, lww), "left_semi"))
       case _ => readRaw(spark, m, files)
     }
     m.tombstoneColumn match {
@@ -457,15 +450,16 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     * field-ID — no reconciliation (the compaction/merge input path).
     * `extra` columns are appended INSIDE the scan's stage (so expressions
     * like `input_file_name()` still see the originating file). No files
-    * gives an empty frame of the same schema: every column nullable, as a
-    * parquet scan reads it. */
+    * gives an empty local relation of the same schema (every column
+    * nullable, as a parquet scan reads it), which Catalyst's empty-relation
+    * propagation prunes from the joins and unions above it. */
   def readRaw(spark: SparkSession, m: TableMetadata, files: Seq[DataFile],
       extra: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
     val cur = m.currentSchema
     def withExtra(df: DataFrame) = if (extra.isEmpty) df else df.select(col("*") +: extra: _*)
     if (files.isEmpty)
       return withExtra(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         StructType(cur.toStruct.fields.map(_.copy(nullable = true)))))
     // group files by the schema version they were written under; each group
     // is one scan with an ID-remap projection, then unionByName
@@ -507,7 +501,8 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     * `(_bucket, key, <lww column> desc)` and keeps the first row of each key
     * ([[KeepFirst]]). A partition holds every row of its buckets, so the row
     * kept is exactly the max-LWW row per key — one scan of `rows`, one
-    * shuffle, no broadcast.
+    * shuffle, no broadcast. [[compact]] folds base and delta rows through
+    * the same keep-first.
     *
     * Per-bucket row counts (and the tombstone count, when the table has a
     * tombstone column) ride the write as one `Observation` placed after the
@@ -516,7 +511,16 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     * and listing reads no parquet footer. Nothing is committed: pass the
     * files to [[commitSnapshot]]. */
   def write(spark: SparkSession, meta: TableMetadata, rows: DataFrame,
-      kind: String): Written = {
+      kind: String): Written =
+    writeBuckets(spark, meta, rows, kind, keepLatest = kind == "delta",
+      dropTombstones = false)
+
+  /** [[write]]'s bucket write. `keepLatest` keeps the max-LWW row per key in
+    * each sorted bucket partition ([[KeepFirst]]); `dropTombstones` then
+    * drops the kept rows that are tombstones — after the keep-first, so a
+    * tombstone still hides every older row of its key. */
+  private def writeBuckets(spark: SparkSession, meta: TableMetadata, rows: DataFrame,
+      kind: String, keepLatest: Boolean, dropTombstones: Boolean): Written = {
     val b = meta.numBuckets
     val key = meta.bucketColumn
     val snapId = nextSnapshotId(meta)
@@ -526,13 +530,14 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
       (0 until b).map(k => sum(when(col("_bucket") === k, 1L).otherwise(0L)).as(s"b$k"))
     val obs = Observation(s"write-$snapId")
     val bucketed = repartitionByBucket(rows.withColumn("_bucket", bucketOf(col(key), b)), b)
-    val laidOut = kind match {
-      case "delta" =>
+    val laidOut =
+      if (keepLatest) {
         val lww = meta.lwwColumn.getOrElse(throw new IllegalArgumentException(
           s"delta files need a last-writer-wins table; $dir has no lwwColumn"))
-        KeepFirst.keepFirstPerGroup(bucketed, Seq("_bucket", key), lww)
-      case _ => bucketed.sortWithinPartitions(col("_bucket"), col(key))
-    }
+        val kept = KeepFirst.keepFirstPerGroup(bucketed, Seq("_bucket", key), lww)
+        meta.tombstoneColumn.filter(_ => dropTombstones)
+          .fold(kept)(ts => kept.filter(!coalesce(col(ts), lit(false))))
+      } else bucketed.sortWithinPartitions(col("_bucket"), col(key))
     laidOut
       .observe(obs, counts.head, counts.tail: _*)
       .write.mode("overwrite")
@@ -595,6 +600,34 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
         s"$snapDirRel bucket $bucket holds ${files.size} files; the writer makes one per bucket")
       files.map(p => DataFile(relativize(p), bucket, rowsByBucket(bucket), schemaVersion, kind))
     })), 120.seconds).flatten
+  }
+
+  /** Fold the delta files of the current snapshot into base files and
+    * commit that as a compaction snapshot (batchId = -snapshotId: it
+    * applies no new events); returns its id, or None when there is no
+    * delta. The raw base and delta rows of the buckets that hold deltas go
+    * through the same bucket write as a delta commit, whose keep-first
+    * leaves the max-LWW row per key — one scan, one shuffle; buckets
+    * without deltas carry forward untouched. Run periodically (every K
+    * batches) so read amplification stays bounded.
+    *
+    * Tombstones are RETAINED in base by default (reads filter them):
+    * purging is only safe once no event below the tombstone's LSN can still
+    * arrive. With `purgeTombstones` the winning tombstones are dropped
+    * after the keep-first, so the older rows they hide go with them. */
+  def compact(spark: SparkSession, stepId: String = "compaction",
+      purgeTombstones: Boolean = false): Option[Long] = {
+    val meta = metadata
+    val snap = meta.currentSnapshot.getOrElse(return None)
+    val files = filesOf(snap)
+    val deltaBuckets = files.filter(_.kind == "delta").map(_.bucket).toSet
+    if (deltaBuckets.isEmpty) return None
+    val (folded, carried) = files.partition(f => deltaBuckets.contains(f.bucket))
+    val written = writeBuckets(spark, meta, readRaw(spark, meta, folded), "base",
+      keepLatest = true, dropTombstones = purgeTombstones)
+    val snapId = nextSnapshotId(meta)
+    commitSnapshot(meta, stepId, batchId = -snapId, carried ++ written.files)
+    Some(snapId)
   }
 
   /** Garbage-collect data files and snapshot dirs no longer referenced by

@@ -51,8 +51,9 @@ object IngestMetrics {
         col("url"), col("updates"), col("last_lsn"))
   }
 
-  /** Per-domain hot-key monitor: the skew detector that feeds the salted
-    * merge path (north_star "popular domains"). */
+  /** Per-domain hot-key report (north_star "popular domains"): the top
+    * domains by event count. Nothing on the ingest path calls it; the merge
+    * takes its skew signal from its own commits. */
   def hotDomains(events: DataFrame, topK: Int = 20): DataFrame =
     events
       .withColumn("domain", regexp_extract(col("url"), "https?://([^/]+)/", 1))

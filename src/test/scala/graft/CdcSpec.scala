@@ -147,6 +147,48 @@ class CdcSpec extends SparkSpec {
     assert(checksum(t.read(spark)) == want)
   }
 
+  test("compaction of base files plus two deltas equals the golden state, one row per key") {
+    val b0 = Seq(ev(1, "I", "k", "k1"), ev(3, "U", "late", "l3"), ev(4, "I", "gone", "g4"),
+      ev(5, "I", "stay", "s5"))
+    val b1 = Seq(ev(6, "U", "k", "k6"), ev(7, "D", "gone", null), ev(8, "U", "new", "n8"))
+    // a late event below the base row's LSN, and the key's third version
+    val b2 = Seq(ev(2, "U", "late", "stale"), ev(9, "U", "k", "k9"), ev(10, "U", "new", "n10"))
+    val t = Engine.createPagesTable(tmpDir("lake-compact3") + "/pages", numBuckets = 2)
+    MergeApply(spark, t, b0.toDS.toDF, 0L)
+    MergeApply.compact(spark, t) // the base files
+    MergeApply(spark, t, b1.toDS.toDF, 1L)
+    MergeApply(spark, t, b2.toDS.toDF, 2L)
+    val kinds = t.filesOf(t.metadata.currentSnapshot.get).map(_.kind)
+    assert(kinds.contains("base") && kinds.count(_ == "delta") >= 2)
+    MergeApply.compact(spark, t)
+    val files = t.filesOf(t.metadata.currentSnapshot.get)
+    assert(files.forall(_.kind == "base"))
+    val golden = Engine.goldenFinalState((b0 ++ b1 ++ b2).toDS.toDF)
+    assert(checksum(t.read(spark)) == checksum(golden))
+    // the rewritten files hold one row per key, the tombstone included
+    val raw = t.readRaw(spark, t.metadata, files)
+    assert(raw.count() == 5 && raw.select("url").distinct().count() == 5)
+    assert(files.map(_.rows).sum == 5)
+    assert(t.read(spark).select("url", "text").as[(String, String)].collect().sorted.toSeq ==
+      Seq(("k", "k9"), ("late", "l3"), ("new", "n10"), ("stay", "s5")))
+  }
+
+  test("compact(purgeTombstones): a winning tombstone removes its key's older base row") {
+    val t = Engine.createPagesTable(tmpDir("lake-purge") + "/pages", numBuckets = 2)
+    MergeApply(spark, t, Seq(ev(1, "I", "x", "x1"), ev(2, "I", "y", "y2")).toDS.toDF, 0L)
+    MergeApply.compact(spark, t) // x lives in a base file
+    MergeApply(spark, t, Seq(ev(5, "D", "x", null), ev(6, "D", "z", null)).toDS.toDF, 1L)
+    MergeApply.compact(spark, t, purgeTombstones = true)
+    val files = t.filesOf(t.metadata.currentSnapshot.get)
+    assert(files.forall(_.kind == "base"))
+    // the tombstones are gone from the files, and x's base row with them
+    val raw = t.readRaw(spark, t.metadata, files).select("url", "_lsn", "_deleted")
+      .as[(String, Long, Boolean)].collect().toSeq
+    assert(raw == Seq(("y", 2L, false)))
+    assert(t.read(spark, includeTombstones = true).select("url").as[String].collect().toSeq ==
+      Seq("y"))
+  }
+
   /** The feed over every commit of `t` is exact against the WAL segments
     * `segs` applied as commits 1..n: one row per (url, commit whose segment
     * holds the url), carrying that segment's max LSN for the url; and its
@@ -186,8 +228,8 @@ class CdcSpec extends SparkSpec {
   }
 
   test("key flood (95% on one url): MOR and CoW state golden, MOR feed exact") {
-    // the first batch runs the plain plan; its duplication ratio engages
-    // the salt memo, so the second runs the salted one
+    // the first MOR batch runs the plain plan; its events per written key
+    // engage the pre-drop memo, so the second drops the losers first
     val n = 4000
     val evs = (1 to n).map(i => ev(i.toLong, if (i % 13 == 0) "D" else "U",
       if (i % 20 != 0) "hot" else s"u${i % 60}", s"t$i"))
@@ -198,7 +240,8 @@ class CdcSpec extends SparkSpec {
       val table = Engine.createPagesTable(dir, numBuckets = 4)
       batches.zipWithIndex.foreach { case (b, i) =>
         MergeApply(spark, table, b, i.toLong, mode = mode)
-        assert(MergeApply.saltAutoEngaged(dir), s"mode=$mode")
+        assert(MergeApply.floodPreDrop(dir) == (mode == MergeApply.MergeOnRead),
+          s"mode=$mode")
       }
       assert(checksum(table.read(spark)) == golden, s"mode=$mode")
       if (mode == MergeApply.MergeOnRead) assertExactFeed(table, batches)
@@ -386,22 +429,23 @@ class CdcSpec extends SparkSpec {
       ("u3", 3L, "U", 2L, Some(200)), ("u1", 4L, "D", 2L, Some(200))))
   }
 
-  test("auto-salt: a key-flood stream engages salting; state stays golden") {
+  test("flood pre-drop: a key-flood stream engages the MOR pre-drop; state stays golden") {
     import spark.implicits._
     val ts = new java.sql.Timestamp(0L)
     def ev(lsn: Long, url: String) =
       graft.model.ChangeEvent(lsn, "U", url, ts, Array.emptyByteArray, s"t$lsn", "en")
-    // 95% of each batch hits ONE url → duplication ratio ≈ 19 ≥ the auto
-    // threshold: the next batch drops the flood's losers through the salted
-    // max-LSN aggregate and a broadcast semi join before the delta write
+    // 95% of each batch hits ONE url → 2000 events over 101 written keys
+    // ≈ 19.8 ≥ the threshold: the next batch drops the flood's losers
+    // through the max-LSN aggregate and a broadcast semi join before the
+    // delta write
     val n = 2000
     val b1 = (1 to n).map(i => ev(i.toLong, if (i % 20 != 0) "hot" else s"u$i"))
     val b2 = (n + 1 to 2 * n).map(i => ev(i.toLong, if (i % 20 != 0) "hot" else s"u$i"))
     val dir = tmpDir("flood") + "/pages"
     val table = Engine.createPagesTable(dir, numBuckets = 8)
     MergeApply(spark, table, b1.toDS.toDF, 0L) // observes the ratio
-    assert(MergeApply.lastDupRatio(dir).exists(_ > 8.0))
-    assert(MergeApply.saltAutoEngaged(dir)) // batch 2 runs the salted plan
+    assert(MergeApply.floodPreDropRatio(dir) == Some(n / 101.0)) // exact, not approx
+    assert(MergeApply.floodPreDrop(dir)) // batch 2 runs the pre-drop
     MergeApply(spark, table, b2.toDS.toDF, 1L)
     val got = checksum(table.read(spark).select(pageCols.map(col): _*))
     val want = checksum(Engine.goldenFinalState((b1 ++ b2).toDS.toDF))

@@ -245,10 +245,11 @@ class LakeSpec extends SparkSpec {
     assert(got.filter($"url" === "u17").count() == 1)
   }
 
-  test("MOR delta-only fast path: no base files → direct max-LSN reconcile") {
-    // a fresh table with ONLY delta commits (the q_cdc_merge shape) takes
-    // the short plan — no delta-key distinct, no joins against empty base —
-    // and must still LWW-reconcile across commits and filter tombstones
+  test("MOR delta-only read: the empty base prunes to one semi join over the max-LSN aggregate") {
+    // a fresh table with ONLY delta commits (the q_cdc_merge shape): its
+    // base side is an empty local relation, so Catalyst prunes the joins
+    // against it, and the read must still LWW-reconcile across commits and
+    // filter tombstones
     val dir = tmpDir("lake-mor-deltaonly") + "/pages"
     val table = cdc.Engine.createPagesTable(dir, 4)
     def evd(lsn: Long, op: String, url: String) = graft.model.ChangeEvent(
@@ -262,7 +263,7 @@ class LakeSpec extends SparkSpec {
     val got = table.read(spark).select("url", "text", "_lsn")
       .as[(String, String, Long)].collect().sortBy(_._1).toSeq
     assert(got == Seq(("a", "t10", 10L), ("c", "t12", 12L))) // b tombstoned
-    // the plan really is the short one: no anti join (untouchedBase branch)
+    // the plan really is pruned: no anti join (the untouched-base side)
     val plan = table.read(spark).queryExecution.executedPlan.toString
     assert(!plan.contains("LeftAnti"), "delta-only read still plans the base anti join")
   }
