@@ -245,7 +245,7 @@ class LakeSpec extends SparkSpec {
     assert(got.filter($"url" === "u17").count() == 1)
   }
 
-  test("MOR delta-only read: the empty base prunes to one semi join over the max-LSN aggregate") {
+  test("MOR delta-only fast path: no base files → direct max-LSN reconcile") {
     // a fresh table with ONLY delta commits (the q_cdc_merge shape): its
     // base side is an empty local relation, so Catalyst prunes the joins
     // against it, and the read must still LWW-reconcile across commits and
