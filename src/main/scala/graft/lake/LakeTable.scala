@@ -496,13 +496,14 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     * clobbers debris of a crashed attempt at the same snapshot id, so a
     * retry self-heals.
     *
-    * A delta write is the merge-on-read commit's last-writer-wins dedup:
-    * `rows` may hold several rows per key, and each partition is sorted by
-    * `(_bucket, key, <lww column> desc)` and keeps the first row of each key
-    * ([[KeepFirst]]). A partition holds every row of its buckets, so the row
-    * kept is exactly the max-LWW row per key — one scan of `rows`, one
-    * shuffle, no broadcast. [[compact]] folds base and delta rows through
-    * the same keep-first.
+    * On a last-writer-wins table the write keeps one row per key: each
+    * partition is sorted by `(_bucket, key, <lww column> desc)` and keeps the
+    * first row of each key ([[KeepFirst]]). A partition holds every row of
+    * its buckets, so the row kept is exactly the max-LWW row per key — one
+    * scan of `rows`, one shuffle, no broadcast. That is the merge-on-read
+    * commit's dedup (a delta's `rows` may hold several rows per key) and
+    * [[compact]]'s fold of base and delta rows; a copy-on-write commit's
+    * rows are already one per key.
     *
     * Per-bucket row counts (and the tombstone count, when the table has a
     * tombstone column) ride the write as one `Observation` placed after the
@@ -512,15 +513,15 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     * files to [[commitSnapshot]]. */
   def write(spark: SparkSession, meta: TableMetadata, rows: DataFrame,
       kind: String): Written =
-    writeBuckets(spark, meta, rows, kind, keepLatest = kind == "delta",
-      dropTombstones = false)
+    writeBuckets(spark, meta, rows, kind, purgeTombstones = false)
 
-  /** [[write]]'s bucket write. `keepLatest` keeps the max-LWW row per key in
-    * each sorted bucket partition ([[KeepFirst]]); `dropTombstones` then
-    * drops the kept rows that are tombstones — after the keep-first, so a
-    * tombstone still hides every older row of its key. */
+  /** [[write]], dropping the kept rows that are tombstones when
+    * `purgeTombstones` is set ([[compact]]'s purge) — after the keep-first,
+    * so a tombstone still hides every older row of its key. */
   private def writeBuckets(spark: SparkSession, meta: TableMetadata, rows: DataFrame,
-      kind: String, keepLatest: Boolean, dropTombstones: Boolean): Written = {
+      kind: String, purgeTombstones: Boolean): Written = {
+    require(kind == "base" || meta.lwwColumn.isDefined,
+      s"delta files need a last-writer-wins table; $dir has no lwwColumn")
     val b = meta.numBuckets
     val key = meta.bucketColumn
     val snapId = nextSnapshotId(meta)
@@ -530,14 +531,13 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
       (0 until b).map(k => sum(when(col("_bucket") === k, 1L).otherwise(0L)).as(s"b$k"))
     val obs = Observation(s"write-$snapId")
     val bucketed = repartitionByBucket(rows.withColumn("_bucket", bucketOf(col(key), b)), b)
-    val laidOut =
-      if (keepLatest) {
-        val lww = meta.lwwColumn.getOrElse(throw new IllegalArgumentException(
-          s"delta files need a last-writer-wins table; $dir has no lwwColumn"))
+    val laidOut = meta.lwwColumn match {
+      case Some(lww) =>
         val kept = KeepFirst.keepFirstPerGroup(bucketed, Seq("_bucket", key), lww)
-        meta.tombstoneColumn.filter(_ => dropTombstones)
+        meta.tombstoneColumn.filter(_ => purgeTombstones)
           .fold(kept)(ts => kept.filter(!coalesce(col(ts), lit(false))))
-      } else bucketed.sortWithinPartitions(col("_bucket"), col(key))
+      case None => bucketed.sortWithinPartitions(col("_bucket"), col(key))
+    }
     laidOut
       .observe(obs, counts.head, counts.tail: _*)
       .write.mode("overwrite")
@@ -624,7 +624,7 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     if (deltaBuckets.isEmpty) return None
     val (folded, carried) = files.partition(f => deltaBuckets.contains(f.bucket))
     val written = writeBuckets(spark, meta, readRaw(spark, meta, folded), "base",
-      keepLatest = true, dropTombstones = purgeTombstones)
+      purgeTombstones)
     val snapId = nextSnapshotId(meta)
     commitSnapshot(meta, stepId, batchId = -snapId, carried ++ written.files)
     Some(snapId)
