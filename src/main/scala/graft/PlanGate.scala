@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationComm
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, BroadcastExchangeLike,
   ReusedExchangeExec, ShuffleExchangeLike}
-import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, ShuffledHashJoinExec,
+  SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -32,7 +33,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     backlog);
   *  6. a MOR delta or compaction write with more than one Exchange or any
   *     BroadcastExchange (its last-writer-wins dedup runs inside the bucket
-  *     shuffle's partitions: one scan, one shuffle).
+  *     shuffle's partitions: one scan, one shuffle);
+  *  7. a CoW write with more than one Exchange or any shuffled hash or
+  *     sort-merge join (its current rows and winning events meet in the
+  *     same keep-first bucket write; the winners are broadcast).
   *
   * Plans are inspected AFTER execution so AQE's final plan (isFinalPlan)
   * is what's audited, not the pre-runtime guess.
@@ -143,12 +147,22 @@ object PlanGate {
     val events = segment("events", generated)
     val late = segment("late", generated.limit(80).withColumn("lsn", col("lsn") + 1000000L))
 
-    // copy-on-write: a first commit, then one that joins against its state
+    // copy-on-write: a first commit, then one that folds into its state
     val cow = cdc.Engine.createPagesTable(s"$tmp/cow", 4)
     cdc.MergeApply(spark, cow, events, 0L, stepId = "gate",
       mode = cdc.MergeApply.CopyOnWrite)
     cdc.MergeApply(spark, cow, late, 1L, stepId = "gate", mode = cdc.MergeApply.CopyOnWrite)
-    auditWrites("merge-apply-cow", s"$tmp/cow/", 2)
+    // each CoW write folds current rows and winning events through the
+    // bucket write's keep-first: one shuffle, no shuffled join
+    for ((path, plan) <- auditWrites("merge-apply-cow", s"$tmp/cow/", 2)) {
+      val nodes = walk(plan)
+      val snap = path.substring(path.lastIndexOf('/') + 1)
+      check("merge-apply-cow", nodes.count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+        s"$snap write has exactly one exchange")
+      check("merge-apply-cow",
+        !nodes.exists(n => n.isInstanceOf[ShuffledHashJoinExec] || n.isInstanceOf[SortMergeJoinExec]),
+        s"$snap write has no shuffled join")
+    }
 
     // ---- merge-on-read: two delta commits around a compaction; the
     // table's reconciling read is audited below -----------------------------

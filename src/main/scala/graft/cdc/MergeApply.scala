@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.lake._
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The merge-apply stage (north_rule core): apply one micro-batch of change
@@ -27,27 +27,32 @@ import org.apache.spark.sql.functions._
   *    is what 10^10-event ingest needs. Reads reconcile (max LSN per key);
   *    `compact()` folds deltas into base files periodically, through the
   *    same keep-first bucket write (`LakeTable.compact`).
-  *  - **CopyOnWrite**: join against current state and rewrite touched
-  *    buckets — read-optimized, for low-rate/reference tables.
+  *  - **CopyOnWrite**: the touched buckets' current rows and the batch's
+  *    winning events are rewritten as base files through the same
+  *    keep-first bucket write — read-optimized, for low-rate/reference
+  *    tables.
   *
   * Scale design (local[32] here, 1000 executors in production):
-  *  - exact last-writer-wins dedup in both modes, never a window. MOR: the
-  *    delta write sorts each bucket partition by (key, lsn desc) and keeps
-  *    the first row per key (`LakeTable.write`) — the batch is scanned once
-  *    and shuffled once, losing rows included, in 2 jobs. CoW: a slim
-  *    `groupBy(key).agg(max(lsn))` (map-side partial aggregation: a hot url
-  *    collapses to ≤1 row per input partition before the shuffle) collected
-  *    once, then a broadcast semi join back on (key, lsn).
+  *  - exact last-writer-wins dedup, never a window, decided in one place
+  *    for every data file: `LakeTable.write` sorts each bucket partition by
+  *    (key, lsn desc) and keeps the first row per key. A MOR commit scans
+  *    and shuffles the batch once, losing rows included, in 2 jobs. A CoW
+  *    commit first collects the batch's slim winners (`winnersOf`: a
+  *    fixed-width `groupBy(key).agg(max(lsn), max(when(op = 'D', lsn)))`,
+  *    map-side partial aggregation — a hot url collapses to ≤1 row per
+  *    input partition before the shuffle), whose broadcast semi join back
+  *    on (key, lsn) drops the losing payloads before the write's one
+  *    shuffle.
   *  - skew: the in-partition dedup sends every row of a key to one task,
   *    so a flooded key is one long task. When the previous MOR commit wrote
   *    ≤ 1 key per 8 events, the next one first drops the losers through
-  *    the CoW shape — the slim max-LSN aggregate and the broadcast semi
-  *    join — before any payload shuffles (the flood A/B is in CHANGES.md).
+  *    the same collected winners and broadcast semi join before any
+  *    payload shuffles (the flood A/B is in CHANGES.md).
   *  - copy-on-write touches only buckets present in the batch (manifest
   *    file pruning); untouched files carry forward without IO.
   *  - stats ride the write via `Observation` — no second pass.
   *
-  * This object decides WHAT to write (dedup, LWW classification, which
+  * This object decides WHAT to write (which events, the LWW counts, which
   * files carry forward); `LakeTable.write` and `LakeTable.commitSnapshot`
   * own how the files are laid out and how the snapshot is committed.
   */
@@ -57,6 +62,13 @@ object MergeApply {
   case object CopyOnWrite extends MergeMode
   case object MergeOnRead extends MergeMode
 
+  /** What a commit applied. Copy-on-write classifies each winning event
+    * against the key's current row: `inserted` (new key, or an upsert over
+    * a tombstone it beats), `updated`, `deleted` (a live row), and
+    * `keptLate` (an event at or below its row's LSN, which loses).
+    * Merge-on-read never reads current state: it reports each kept upsert
+    * as `inserted` and each kept delete as `deleted`, and `updated` and
+    * `keptLate` as 0. */
   final case class MergeStats(
       batchId: Long,
       snapshotId: Long,
@@ -86,16 +98,28 @@ object MergeApply {
   private[graft] def floodPreDrop(tableDir: String): Boolean =
     floodPreDropRatio(tableDir).exists(_ >= 8.0)
 
-  /** Slim (key, max-LSN) winners of a batch: a fixed-width
-    * `groupBy(key).agg(max(lsn))` (whole-stage-codegen HashAggregate with
-    * map-side partial aggregation — a hot key collapses to ≤1 slim row per
-    * input partition before the shuffle). This deliberately avoids
-    * `max_by(struct(...))`, whose variable-width aggregation buffer forces
-    * SortAggregate (two extra sorts of full payloads). A semi join back on
-    * (key, lsn) then picks exactly the winners because LSNs are unique
-    * within a batch (the WAL contract). */
-  private def maxLsnOf(batch: DataFrame, key: String): DataFrame =
-    batch.groupBy(col(key)).agg(max(col("lsn")).as("lsn"))
+  /** The batch's winners, collected once: per key its max LSN, whether that
+    * event is a delete (`__del`) and its bucket (`__bkt`), from a
+    * fixed-width hash aggregate (map-side partial aggregation collapses a
+    * hot key to ≤1 slim row per input partition; `max_by(struct(...))`
+    * would force a SortAggregate over full payloads). ~60 B per batch key;
+    * also returned as a local relation for the broadcast sides. */
+  private def winnersOf(spark: SparkSession, batch: DataFrame, key: String,
+      numBuckets: Int): (Array[Row], DataFrame) = {
+    val slim = batch.groupBy(col(key))
+      .agg(max(col("lsn")).as("lsn"), max(when(col("op") === "D", col("lsn"))).as("__dlsn"))
+      .select(col(key), col("lsn"),
+        coalesce(col("__dlsn") === col("lsn"), lit(false)).as("__del"),
+        LakeTable.bucketOf(col(key), numBuckets).as("__bkt"))
+    val rows = slim.collect()
+    (rows, spark.createDataFrame(java.util.Arrays.asList(rows: _*), slim.schema))
+  }
+
+  /** The events of `batch` that won their key: a broadcast semi join back
+    * on (key, lsn), exact because LSNs are unique within a batch (the WAL
+    * contract). It runs before any shuffle, so losing payloads never move. */
+  private def winningEvents(batch: DataFrame, winners: DataFrame, key: String): DataFrame =
+    batch.join(broadcast(winners.select(key, "lsn")), Seq(key, "lsn"), "left_semi")
 
   /** Apply `batch` (schema: lsn long, op string, <key>, value columns of the
     * table's current schema) to `table`. Returns stats; a batchId already in
@@ -123,9 +147,14 @@ object MergeApply {
         skipped = true, 0, 0, 0, 0)
 
     val key = meta.bucketColumn
-    val cur = meta.currentSchema
-    val valueCols: Seq[String] = cur.fields.map(_.name)
+    val valueCols: Seq[String] = meta.currentSchema.fields.map(_.name)
       .filterNot(n => n == key || n == "_lsn" || n == "_deleted")
+    // events as table rows: the event's LSN orders the key's versions, a
+    // delete is a tombstone
+    def asRows(events: DataFrame): DataFrame = events.select(
+      (col(key) +: valueCols.map(col)) ++ Seq(
+        col("lsn").as("_lsn"),
+        (col("op") === "D").as("_deleted")): _*)
 
     val obsSrc = Observation(s"src-$batchId")
     val observedBatch = batch.observe(
@@ -140,18 +169,13 @@ object MergeApply {
         // the batch goes to the delta write, whose bucket partitions keep
         // the max-LSN row per key: one scan, one shuffle, no broadcast. A
         // flooded key lands on one task there, so under the pre-drop memo
-        // the losers are dropped first by the exact (key, lsn) broadcast
-        // semi join (flood A/B in CHANGES.md)
+        // the losers are dropped first through the collected winners
+        // (flood A/B in CHANGES.md)
         val rows =
           if (floodPreDrop(table.dir))
-            observedBatch.join(broadcast(maxLsnOf(observedBatch, key)),
-              Seq(key, "lsn"), "left_semi")
+            winningEvents(batch, winnersOf(spark, observedBatch, key, meta.numBuckets)._2, key)
           else observedBatch
-        val written = table.write(spark, meta, rows.select(
-            (col(key) +: valueCols.map(col)) ++ Seq(
-              col("lsn").as("_lsn"),
-              (col("op") === "D").as("_deleted")): _*),
-          kind = "delta")
+        val written = table.write(spark, meta, asRows(rows), kind = "delta")
         val srcRow = obsSrc.get
         if (written.rows > 0)
           eventsPerKey.put(table.dir, g(srcRow, "events").toDouble / written.rows)
@@ -164,70 +188,42 @@ object MergeApply {
           snap.rowsInserted, 0, snap.rowsDeleted, 0)
 
       case CopyOnWrite =>
-        // ---- join + rewrite touched buckets -------------------------------
-        // exact LWW dedup: the slim (key, max-LSN, bucket) winners are
-        // collected once — bounded by batch key-cardinality × ~60 B — and
-        // give both the touched buckets and the broadcast side of a semi
-        // join back on (key, lsn) that fetches the winning payloads,
-        // __s_-prefixed for the full-outer join against current state. The
-        // payload side never shuffles before that join (measured: shuffled
-        // semi joins anti-scale under local-mode shuffle contention).
-        val slim = maxLsnOf(observedBatch, key)
-          .withColumn("__bkt", LakeTable.bucketOf(col(key), meta.numBuckets))
-        val winners = slim.collect()
-        val touched: Set[Int] = winners.map(_.getInt(2)).toSet
-        val source = batch
-          .join(broadcast(spark.createDataFrame(java.util.Arrays.asList(winners: _*),
-            slim.schema).select(key, "lsn")), Seq(key, "lsn"), "left_semi")
-          .select(
-            (col(key) +: col("lsn").as("__s_lsn") +: col("op").as("__s_op") +:
-              valueCols.map(c => col(c).as(s"__s_$c"))): _*)
-
-        val target = table.read(spark, Some(touched), includeTombstones = true)
-        // full-outer by key: SHUFFLED HASH, not sort-merge (guide §3.1) —
-        // sort-merge sorts FULL PAYLOAD rows on both sides before merging,
-        // two payload sorts the hash join skips entirely. The build side is
-        // the deduped batch (bounded: ≤ batch keys), so the per-partition
-        // hash table stays small at any table size; the output is re-sorted
-        // by key only at the bucket write.
-        val joined = target.join(source.hint("shuffle_hash"), Seq(key), "full_outer")
-
-        val targetLive = col("_lsn").isNotNull && !coalesce(col("_deleted"), lit(false))
-        val srcWins = col("__s_lsn").isNotNull &&
-          (col("_lsn").isNull || col("__s_lsn") > col("_lsn"))
-        val action = when(!srcWins,
-            when(col("__s_lsn").isNotNull, lit("late")).otherwise(lit("keep")))
-          .when(col("__s_op") === "D",
-            when(targetLive, lit("delete")).otherwise(lit("tombstone")))
-          .when(targetLive, lit("update"))
-          .otherwise(lit("insert")) // incl. resurrect over a tombstone
-
+        // ---- rewrite the touched buckets ----------------------------------
+        // their current rows and the batch's winning events go as one union
+        // through the base write, whose keep-first settles each key: a late
+        // event loses to its row, a delete wins as a tombstone, a newer
+        // upsert resurrects a key over its tombstone
+        val (won, winners) = winnersOf(spark, observedBatch, key, meta.numBuckets)
+        val touched: Set[Int] = won.map(_.getInt(3)).toSet
+        val upserts = won.count(!_.getBoolean(2))
+        // the counts, observed in the write's own job by a broadcast probe
+        // of the current rows: a winner above a live row updates or deletes
+        // it, one at or below its row is late, and an upsert winner inserts
+        // unless it met a row other than a tombstone it beats
+        val beats = col("__w_lsn") > col("_lsn")
+        val live = !coalesce(col("_deleted"), lit(false))
+        val isDelete = col("__del")
+        def tally(c: Column) = sum(when(c, 1L))
         val obsMerge = Observation(s"merge-$batchId")
-        val classified = joined
-          .withColumn("_action", action)
+        val currentRows = table.read(spark, Some(touched), includeTombstones = true)
+          .join(broadcast(winners.select(col(key), col("lsn").as("__w_lsn"), isDelete)),
+            Seq(key), "left_outer")
           .observe(obsMerge,
-            sum(when(col("_action") === "insert", 1).otherwise(0)).as("inserted"),
-            sum(when(col("_action") === "update", 1).otherwise(0)).as("updated"),
-            sum(when(col("_action") === "delete", 1).otherwise(0)).as("deleted"),
-            sum(when(col("_action") === "late", 1).otherwise(0)).as("late"))
+            tally(live && beats && !isDelete).as("updated"),
+            tally(live && beats && isDelete).as("deleted"),
+            tally(!beats).as("late"),
+            tally(!isDelete && !(beats && !live)).as("met"))
+          .drop("__w_lsn", "__del")
 
-        val fromSource = col("_action").isin("insert", "update", "delete", "tombstone")
-        val outCols = Seq(col(key)) ++
-          valueCols.map(c =>
-            when(fromSource, col(s"__s_$c")).otherwise(col(c)).as(c)) ++
-          Seq(
-            when(fromSource, col("__s_lsn")).otherwise(col("_lsn")).as("_lsn"),
-            when(fromSource, col("__s_op") === "D")
-              .otherwise(coalesce(col("_deleted"), lit(false))).as("_deleted"))
-
-        val written = table.write(spark, meta, classified.select(outCols: _*), kind = "base")
+        val written = table.write(spark, meta,
+          currentRows.unionByName(asRows(winningEvents(batch, winners, key))), kind = "base")
         val srcRow = obsSrc.get; val mergeRow = obsMerge.get
         val carried = meta.currentSnapshot
           .map(s => table.filesOf(s).filterNot(f => touched.contains(f.bucket)))
           .getOrElse(Nil)
         val snap = table.commitSnapshot(meta, stepId, batchId, carried ++ written.files,
           ledger = true, lsnMin = g(srcRow, "lsnMin"), lsnMax = g(srcRow, "lsnMax"),
-          inserted = g(mergeRow, "inserted"), updated = g(mergeRow, "updated"),
+          inserted = upserts - g(mergeRow, "met"), updated = g(mergeRow, "updated"),
           deleted = g(mergeRow, "deleted"),
           inputSnapshots = inputSnapshots, inputChecksum = inputChecksum)
         MergeStats(batchId, snap.snapshotId, skipped = false,

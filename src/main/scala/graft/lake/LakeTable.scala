@@ -29,9 +29,9 @@ import scala.jdk.CollectionConverters._
   * copy-on-write rewrites, compactions, DAG step outputs and INSTANT
   * re-stamps alike. Callers decide what rows to write and which files
   * carry forward. On a last-writer-wins table, base and delta files and
-  * how they fold stay private here: a delta write and `compact` keep the
-  * max-LWW row per key inside the bucket write, and `read` reconciles
-  * with one max-LWW aggregate.
+  * how they fold stay private here: every write (delta, copy-on-write,
+  * `compact`) keeps the max-LWW row per key inside the bucket write, and
+  * `read` reconciles with one max-LWW aggregate.
   *
   * Design notes for 100 TB scale:
   *  - data is hash-bucketed by key (`LakeTable.bucketOf`) — merges prune to
@@ -501,9 +501,10 @@ class LakeTable(val dir: String, hadoopConf: Configuration = LakeTable.defaultCo
     * first row of each key ([[KeepFirst]]). A partition holds every row of
     * its buckets, so the row kept is exactly the max-LWW row per key — one
     * scan of `rows`, one shuffle, no broadcast. That is the merge-on-read
-    * commit's dedup (a delta's `rows` may hold several rows per key) and
-    * [[compact]]'s fold of base and delta rows; a copy-on-write commit's
-    * rows are already one per key.
+    * commit's dedup (a delta's `rows` may hold several rows per key),
+    * [[compact]]'s fold of base and delta rows, and a copy-on-write
+    * commit's fold of the touched buckets' current rows and the batch's
+    * winning events.
     *
     * Per-bucket row counts (and the tombstone count, when the table has a
     * tombstone column) ride the write as one `Observation` placed after the

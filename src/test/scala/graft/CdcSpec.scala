@@ -1,6 +1,7 @@
 package graft
 
 import graft.cdc._
+import graft.lake.LakeTable
 import graft.ops.Checksums
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -90,6 +91,20 @@ class CdcSpec extends SparkSpec {
     val out = table.read(spark).select("url", "text", "_lsn")
       .as[(String, String, Long)].collect().sortBy(_._1)
     assert(out.toSeq == Seq(("u1", "v2", 2L), ("u3", "x2", 6L)))
+
+    // against tombstones: an upsert above one resurrects its key (an
+    // insert), one below it is late; a live key is deleted; a new key
+    val b2 = Seq(
+      ev(8, "U", "u2", "w2"), // over u2's lsn-5 tombstone
+      ev(3, "U", "u9", "zombie"), // under u9's lsn-7 tombstone
+      ev(9, "D", "u3", null),
+      ev(10, "I", "u4", "y1")).toDS.toDF
+    val s2 = MergeApply(spark, table, b2, 2L, mode = MergeApply.CopyOnWrite)
+    assert((s1.inserted, s1.updated, s1.deleted, s1.keptLate) == ((0L, 1L, 1L, 1L)))
+    assert((s2.inserted, s2.updated, s2.deleted, s2.keptLate) == ((2L, 0L, 1L, 1L)))
+    val out2 = table.read(spark).select("url", "text", "_lsn")
+      .as[(String, String, Long)].collect().sortBy(_._1)
+    assert(out2.toSeq == Seq(("u1", "v2", 2L), ("u2", "w2", 8L), ("u4", "y1", 10L)))
   }
 
   test("tombstones guard against lower-LSN events in LATER batches (both modes)") {
@@ -131,6 +146,26 @@ class CdcSpec extends SparkSpec {
     val cow = Engine.createPagesTable(tmpDir("lake-cow") + "/pages", 4)
     Engine.replaySegments(spark, segs, cow, mode = MergeApply.CopyOnWrite)
     assert(checksum(cow.read(spark)) == want)
+  }
+
+  test("copy-on-write over merge-on-read deltas equals the golden state; touched buckets go base-only") {
+    val cfg = EventGen.Config(nEvents = 6000, nUrls = 400, seed = 41,
+      deleteRatio = 0.1, parallelism = 4)
+    val walDir = tmpDir("wal-mixed")
+    val segs = EventGen.writeWalSegments(spark, cfg, walDir, 3)
+    val events = spark.read.schema(Engine.eventSchema).parquet(walDir + "/*")
+    val t = Engine.createPagesTable(tmpDir("lake-mixed") + "/pages", numBuckets = 8)
+    Engine.replaySegments(spark, segs.take(2), t, mode = MergeApply.MergeOnRead)
+    assert(t.filesOf(t.metadata.currentSnapshot.get).exists(_.kind == "delta"))
+    MergeApply(spark, t, spark.read.schema(Engine.eventSchema).parquet(segs(2)), 2L,
+      mode = MergeApply.CopyOnWrite)
+    assert(checksum(t.read(spark)) == checksum(Engine.goldenFinalState(events)))
+    val touched = spark.read.schema(Engine.eventSchema).parquet(segs(2))
+      .select(LakeTable.bucketOf(col("url"), 8)).distinct().as[Int].collect().toSet
+    val files = t.filesOf(t.metadata.currentSnapshot.get)
+    assert(touched.nonEmpty)
+    for (b <- touched)
+      assert(files.filter(_.bucket == b).map(_.kind).distinct == Seq("base"), s"bucket $b")
   }
 
   test("MOR in-partition dedup equals the golden state, before and after compaction") {

@@ -2,8 +2,9 @@
 # Per-round plan regression gate: compiles, runs graft.PlanGate over the most
 # expensive queries + the CDC merge/MOR-read plans, and records the output.
 # Fails (non-zero) on cartesian products, unpartitioned windows, var-width
-# SortAggregates in the merge path, broadcast-of-base in the MOR read, or a
-# MOR delta or compaction write with more than one exchange or any broadcast.
+# SortAggregates in the merge path, broadcast-of-base in the MOR read, a
+# MOR delta or compaction write with more than one exchange or any broadcast,
+# or a CoW write with more than one exchange or any shuffled join.
 # Usage: tools/plan_gate.sh [sfDir] [outFile]
 set -euo pipefail
 cd "$(dirname "$0")/.."
