@@ -152,8 +152,6 @@ object PlanGate {
     cdc.MergeApply(spark, cow, events, 0L, stepId = "gate",
       mode = cdc.MergeApply.CopyOnWrite)
     cdc.MergeApply(spark, cow, late, 1L, stepId = "gate", mode = cdc.MergeApply.CopyOnWrite)
-    // each CoW write folds current rows and winning events through the
-    // bucket write's keep-first: one shuffle, no shuffled join
     for ((path, plan) <- auditWrites("merge-apply-cow", s"$tmp/cow/", 2)) {
       val nodes = walk(plan)
       val snap = path.substring(path.lastIndexOf('/') + 1)
